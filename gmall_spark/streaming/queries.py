@@ -931,20 +931,19 @@ def streaming_mb_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_mb_bucketed_is_new", _MB_IS_NEW_ORACLE)
 def streaming_mb_bucketed_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST1 with key-coarsened state across three micro-batches — the
-    bucketed-seen-set pattern (streaming_mb_bucketed_uv) applied to a
-    second operator, proving it generalizes: one array<long> of ever-seen
-    user ids per hash bucket, ~n_buckets Python calls per batch instead of
-    one per active user. Same oracle as streaming_mb_is_new, emit_batch
-    included — batch-for-batch identical emission."""
+    """ST1 with key-coarsened state across three micro-batches: the same
+    is_new kernel as streaming_mb_is_new under the hash-bucket grouping —
+    one array<long> of ever-seen user ids per bucket, a bounded number of
+    Python calls per batch instead of one per active user. Same oracle as
+    streaming_mb_is_new, emit_batch included — batch-for-batch identical
+    emission."""
     from gmall_spark.streaming.multibatch import (
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import fix_is_new_bucketed_stream
 
     return run_collect_batches(
-        fix_is_new_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
         shuffle_partitions=stream_shuffle_width(),
     )
 
@@ -995,10 +994,8 @@ def streaming_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one int64-coded seen-set row per bucket makes the call count
     independent of entity count. Same first-touch emission, same oracle —
     the twin pair is the semantics proof."""
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
-
     out = run_to_memory(
-        dedup_daily_bucketed_stream(stream_events(spark, sf_dir)),
+        dedup_daily_stream(stream_events(spark, sf_dir), bucketed=True),
         _name("s_bkt_uv"),
         shuffle_partitions=stream_shuffle_width(),
     )
@@ -1017,10 +1014,8 @@ def streaming_mb_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
-
     out = run_collect_batches(
-        dedup_daily_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
         shuffle_partitions=stream_shuffle_width(),
     )
     return out.select(
@@ -1135,9 +1130,10 @@ def streaming_mb_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_mb_bucketed_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST3 with KEY-COARSENED state across three micro-batches — the
     bucketed-seen-set pattern extended to the CEP operator, the first with
-    TIMERS: per-key pendings live as parallel arrays in one state row per
-    hash bucket, the per-key timers collapse to one min-deadline bucket
-    timer plus a watermark sweep on every invocation (the sweep must run on
+    TIMERS: the same bounce kernel as streaming_mb_bounce, with per-key
+    pendings as parallel arrays in one state row per hash bucket and the
+    per-key timers collapsed to one min-deadline bucket timer plus the
+    kernel's watermark sweep on every invocation (the sweep must run on
     the input path too — a bucket with input gets no timeout invocation
     that batch, while per-key twins of its quiet keys would fire). Same
     oracle as streaming_mb_bounce, emit_batch included — batch-for-batch
@@ -1146,10 +1142,8 @@ def streaming_mb_bucketed_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import detect_bounce_bucketed_stream
-
     out = run_collect_batches(
-        detect_bounce_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
         shuffle_partitions=stream_shuffle_width(),
     )
     return out.select(

@@ -1,35 +1,63 @@
 """Streaming stateful operators — the Flink keyed-state/CEP pieces
-(SURVEY §2.7 ST1–ST3) as applyInPandasWithState.
+(SURVEY §2.7 ST1–ST3) as applyInPandasWithState / transformWithState.
 
 These are the only operators in the engine that need arbitrary keyed state;
 everything else is declarative. Each mirrors its batch twin in
 operators/stateful.py (same outputs on the same fully-arrived data), and the
 tests assert exactly that equivalence.
 
+Design — one kernel per semantics, thin shells over it:
+
+- **Kernels.** Each keyed-state semantics is written ONCE as a pure numpy
+  function ``kernel(state, pdf, wm_ms) -> (state, emissions)``:
+  ``is_new_kernel`` (BaseLogApp's first-touch repair), ``daily_first_kernel``
+  (UniqueVisitApp's daily dedup) and ``bounce_kernel`` (UserJumpDetailApp's
+  CEP bounce). ``state`` is a tuple of aligned int64 arrays holding the
+  entries of every key in the group; ``pdf`` is the group's micro-batch
+  from ``_batch_frame``, sorted by (key, ts, event_id), or None on a timer
+  invocation; ``wm_ms`` is the event-time watermark. A kernel never touches
+  Spark, so its batch-split and bucket invariance are property-tested
+  directly (tests/test_keyed_state_kernels.py).
+- **Grouping.** ``_keyed_state`` is the one applyInPandasWithState shell.
+  Per-key grouping (``bucketed=False``) groups by the entity key — the
+  faithful Flink analog, one state row of ≤1-long arrays per entity.
+  Bucketed grouping groups by pmod(xxhash64(key), 4·stream width): one
+  state row per bucket, so a micro-batch costs a bounded number of Python
+  invocations instead of one per active entity (7.6–13.5× at sf10). Per-key
+  is simply identity bucketing — Flink's key-group idea (*State Management
+  in Apache Flink*, VLDB 2017) — and both groupings emit bit-identically.
+- **TWS adapters.** ``fix_is_new_tws`` / ``detect_bounce_tws`` map their
+  typed ValueState and first-class timers onto the same kernels.
+
 Scale notes:
-- State is partitioned by the entity key (mid/user_id) — same shuffle as the
-  batch window functions, RocksDB-backed state store at cluster scale
-  (spark.sql.streaming.stateStore.providerClass).
-- Event-time timeouts are watermark-driven: a key's timer fires when the
-  watermark passes it, which is Flink's event-time timer semantics
-  (UserJumpDetailApp's CEP within(10s) timeout path).
-- Batches arrive unordered *between* micro-batches; per-key state carries the
-  ordering guarantee forward (the reference relies on Kafka per-partition
-  order the same way).
-- Per-batch work is vectorized pandas (sort + shift), not per-row Python:
-  only the cross-batch carry (pending entry, seen-set) is scalar state.
+- Event-time timeouts are watermark-driven: a pending entry times out when
+  the watermark passes it, which is Flink's event-time timer semantics
+  (UserJumpDetailApp's CEP within(10s) timeout path). Bucketed grouping
+  keeps one group timer at the minimum pending deadline, and the bounce
+  kernel sweeps every due pending on each invocation.
+- Batches arrive unordered *between* micro-batches; the carried state keeps
+  the ordering guarantee forward (the reference relies on Kafka
+  per-partition order the same way).
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+#: kernel state: aligned int64 arrays, one entry per (key, ...) in the group
+State = tuple[np.ndarray, ...]
+
+#: day code = key·2¹⁶ + epoch day (the day fits 16 bits until year 2149)
+_DAY_BITS = 1 << 16
+
 
 def _batch_frame(
     pdfs: Iterator[pd.DataFrame], sort_cols: list[str] | None = None
@@ -40,19 +68,16 @@ def _batch_frame(
     Spark hands a group's rows as an iterator of Arrow-batch slices whose
     ORDER IS ARBITRARY: rows within a shuffle partition are clustered by
     key but not time-sorted, so a key whose rows straddle an Arrow-batch
-    boundary sees its later chunk first. The previous per-chunk
-    sort-then-carry pattern was therefore order-UNSOUND — it passed every
-    small-scale gate (groups rarely straddle a 10k-row Arrow batch there)
-    and lost 95 of 1,970,000 bounce rows in the first sf10 topology
-    verification (BENCH_r08_e2e_sf10_ab.json, the per-key arm; the
-    bucketed bounce twin already concatenated before sorting and matched
-    the oracle exactly). Memory: this buffers ONE group's batch slice —
-    bounded by a key's per-batch volume (per-entity keys: tens of rows)
-    or batch/n_buckets for the bucketed family, which already buffered.
+    boundary sees its later chunk first. A per-chunk sort-then-carry
+    pattern is therefore order-UNSOUND — it passes small-scale gates
+    (groups rarely straddle a 10k-row Arrow batch there) and lost 95 of
+    1,970,000 bounce rows in the first sf10 topology verification
+    (BENCH_r08_e2e_sf10_ab.json). Memory: this buffers ONE group's batch
+    slice — a key's per-batch volume, or batch/buckets when bucketed.
 
     Returns None when the batch holds no rows for the group; the result has
     a fresh positional index (chunk concat repeats labels, and callers use
-    positional/iloc logic)."""
+    positional logic)."""
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if not chunks:
         return None
@@ -62,109 +87,254 @@ def _batch_frame(
     ).reset_index(drop=True)
 
 
-#: streaming source volume above which the production topologies dispatch
-#: the keyed operators to their bucketed twins — see use_bucketed_state.
-#: 64 MiB keeps every sf<=1 bench source on the faithful per-key shape
-#: (events.parquet is ~2 MB at sf0.1, ~20 MB at sf1) while sf10's ~220 MB
-#: source — and any production volume — takes the bucketed recipe.
-BUCKETED_STATE_MIN_BYTES = 64 << 20
+def _starts(a: np.ndarray) -> np.ndarray:
+    """Mask of the rows where a sorted array takes a new value."""
+    out = np.ones(len(a), dtype=bool)
+    out[1:] = a[1:] != a[:-1]
+    return out
 
 
-def use_bucketed_state(input_bytes: int | None) -> bool:
-    """Volume-based dispatch between the per-key keyed-state operators (the
-    faithful Flink analogs: one state row and one Python invocation per
-    entity) and their key-coarsened bucketed twins (the Python-scale
-    recipe, bit-exact emission equivalence asserted by the twin tests).
-
-    Why volume decides: applyInPandasWithState invokes the Python function
-    once per GROUP per micro-batch, so per-entity keying costs O(active
-    entities) interpreter crossings — the measured bottleneck at sf10
-    (220 MB/source): per-key 81-155 s vs bucketed 8.5-11.5 s on the same
-    entries (BENCH_r06_bucketed_state.json, AUDIT r7), while at sf0.1 the
-    two are within noise. The signal is the same pre-start source-size
-    estimate stream_jvm_state_width uses (pipelines._stream_input_bytes).
-
-    SPARK_GRAFT_BUCKETED_STATE=1/0 forces the choice regardless of volume —
-    the A/B and contended-host escape hatch."""
-    env = os.environ.get("SPARK_GRAFT_BUCKETED_STATE")
-    if env is not None:
-        return env.strip().lower() not in ("0", "false", "no", "")
-    return bool(input_bytes) and input_bytes >= BUCKETED_STATE_MIN_BYTES
+def is_new_kernel(
+    state: State, pdf: pd.DataFrame | None, wm_ms: int, *, key: str
+) -> tuple[State, pd.DataFrame | None]:
+    """ST1 — first-touch is_new repair (BaseLogApp.java:69-94). State: the
+    ever-seen keys. A key's first-ever event (its first row in the batch,
+    and not yet seen) keeps is_new=1; every later one is rewritten to 0.
+    Emits (event_id, key, is_new) for every input row. There is no horizon
+    to trim: like Flink's keyed ValueState, a seen key stays seen."""
+    (seen,) = state
+    if pdf is None:
+        return state, None
+    k = pdf[key].to_numpy()
+    first = _starts(k) & ~np.isin(k, seen)
+    out = pd.DataFrame(
+        {"event_id": pdf["event_id"].to_numpy(), key: k, "is_new": first.astype("int32")}
+    )
+    return (np.union1d(seen, k[first]),), out
 
 
-def fix_is_new_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST1 — new/old-visitor repair (BaseLogApp.java:69-94): keyed ValueState
-    holding a seen-flag; the first event a key ever shows keeps is_new=1,
-    every later one is rewritten to 0. Emits (event_id, key, is_new)."""
+def daily_first_kernel(
+    state: State, pdf: pd.DataFrame | None, wm_ms: int, *, key: str
+) -> tuple[State, pd.DataFrame | None]:
+    """ST2 — daily UV dedup (UniqueVisitApp.java:45-87): keep each key's
+    first event per calendar day. State: the seen (key, day) codes.
 
-    out_schema = f"event_id long, {key} long, is_new int"
-    state_schema = "seen int"
+    Retention is the reference's ValueState TTL (24 h) as a sliding window
+    on the group's latest day: codes older than max-day − 1 are dropped.
+    With time-ordered arrival (the chunked sources here; Kafka
+    per-partition order in the reference) no new event can be older than
+    that, so the trim never changes an emission. Emits
+    (key, dt, first_event_id, first_ts)."""
+    (codes,) = state
+    out = None
+    if pdf is not None:
+        ts = pdf["ts"]
+        k = pdf[key].to_numpy()
+        code = k * _DAY_BITS + ts.to_numpy().astype("datetime64[D]").astype("int64")
+        # (key, ts)-sorted rows keep each code's rows adjacent
+        fresh = _starts(code) & ~np.isin(code, codes)
+        codes = np.union1d(codes, code[fresh])
+        out = pd.DataFrame(
+            {
+                key: k[fresh],
+                "dt": ts[fresh].dt.strftime("%Y-%m-%d").to_numpy(),
+                "first_event_id": pdf["event_id"].to_numpy()[fresh],
+                "first_ts": ts.to_numpy()[fresh],
+            }
+        )
+    if len(codes):
+        day = codes % _DAY_BITS
+        codes = codes[day >= day.max() - 1]
+    return (codes,), out
 
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = state.exists and state.get[0] == 1
-        # buffer + ONE global sort: the iterator's chunk order is Arrow
-        # batch order, NOT event-time order (found at sf10, where a key's
-        # rows straddle Arrow-batch boundaries and a per-chunk sort +
-        # carry flagged a later event as the first) — see _batch_frame
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            flags = pd.Series(0, index=pdf.index, dtype="int32")
-            if not seen:
-                flags.iloc[0] = 1
-                seen = True
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"], key: pdf[key], "is_new": flags}
-            )
-        state.update((1 if seen else 0,))
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+def _deadline_ms(ptsus: np.ndarray, timeout_secs: int) -> np.ndarray:
+    """Event-time timer deadline (epoch ms) of each pending entry."""
+    return ptsus // 1000 + timeout_secs * 1000
+
+
+def bounce_kernel(
+    state: State,
+    pdf: pd.DataFrame | None,
+    wm_ms: int,
+    *,
+    key: str,
+    entry_type: str = "view",
+    timeout_secs: int = 600,
+) -> tuple[State, pd.DataFrame]:
+    """ST3 — CEP bounce with BOTH emit paths (UserJumpDetailApp.java:70-120):
+    an entry event is a bounce if the key's next event is another entry
+    (match path) or comes more than the timeout later, or if the watermark
+    passes the entry's deadline with no follow-up (timeout path — Flink's
+    CEP timeout side-output). State: the pending trailing entry of each key,
+    as (key, pending_id, pending_ts µs).
+
+    - Sweep: a pending whose key has no row in the batch fires once
+      ``watermark > ms(ts) + timeout`` — the STRICTLY-beyond predicate
+      Spark applies when firing an event-time timer. The sweep also runs
+      on the input path: a group that receives any event gets no timer
+      invocation that batch, yet its quiet keys' deadlines may have passed.
+    - Resolution: a pending whose key is in the batch resolves against the
+      key's FIRST event by the integer-µs gap (timeout if late, match if
+      the first event is an entry, dropped otherwise).
+    - lead(): within the batch, rows are (key, ts, event_id)-sorted, so row
+      i+1 is the same key's next event unless a new key starts there.
+    - Trailing entry: each key's last event, if an entry, is its new
+      pending.
+
+    Emits (event_id, key, ts, bounce_reason)."""
+    ks, pids, ptsus = state
+    due = wm_ms > _deadline_ms(ptsus, timeout_secs)
+    if pdf is None:
+        keep = ~due
+        out = _bounce_frame(key, [(pids[due], ks[due], ptsus[due], "timeout")])
+        return (ks[keep], pids[keep], ptsus[keep]), out
+
+    tmo_us = timeout_secs * 1_000_000
+    kcol = pdf[key].to_numpy()
+    ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
+    eid = pdf["event_id"].to_numpy()
+    entry = pdf["event_type"].eq(entry_type).to_numpy()
+    new_key = _starts(kcol)
+    first_pos = np.flatnonzero(new_key)
+    last_pos = np.append(first_pos[1:] - 1, len(kcol) - 1)
+    uniq = kcol[first_pos]
+
+    idx = np.searchsorted(uniq, ks)
+    present = uniq[np.minimum(idx, len(uniq) - 1)] == ks
+    fp = first_pos[idx[present]]
+    late = ts_us[fp] - ptsus[present] > tmo_us
+    matched = ~late & entry[fp]
+    swept = ~present & due
+    parts = [(pids[swept], ks[swept], ptsus[swept], "timeout")]
+    for mask, why in ((late, "timeout"), (matched, "match")):
+        parts.append((pids[present][mask], ks[present][mask], ptsus[present][mask], why))
+
+    # zeros at the last row: it never survives `decided`, but it still flows
+    # through the subtraction, and uninitialised int64 can warn on overflow
+    has_next = np.zeros(len(kcol), dtype=bool)
+    has_next[:-1] = ~new_key[1:]
+    gap = np.zeros(len(kcol), dtype="int64")
+    gap[:-1] = ts_us[1:] - ts_us[:-1]
+    nxt_entry = np.zeros(len(kcol), dtype=bool)
+    nxt_entry[:-1] = entry[1:]
+    decided = entry & has_next
+    t_hits = decided & (gap > tmo_us)
+    m_hits = decided & ~t_hits & nxt_entry
+    for mask, why in ((t_hits, "timeout"), (m_hits, "match")):
+        parts.append((eid[mask], kcol[mask], ts_us[mask], why))
+
+    # kept pendings are of keys absent from the batch, so they never
+    # collide with the new trailing entries
+    keep = ~present & ~due
+    tail = last_pos[entry[last_pos]]
+    state = (
+        np.concatenate([ks[keep], kcol[tail]]),
+        np.concatenate([pids[keep], eid[tail]]),
+        np.concatenate([ptsus[keep], ts_us[tail]]),
+    )
+    return state, _bounce_frame(key, parts)
+
+
+def _bounce_frame(key: str, parts: list[tuple]) -> pd.DataFrame:
+    """(event_id, key, ts µs, reason) parts → one emission frame."""
+    eid, k, ts_us = (np.concatenate([p[i] for p in parts]) for i in range(3))
+    reason = np.concatenate([np.full(len(p[0]), p[3], dtype=object) for p in parts])
+    return pd.DataFrame(
+        {
+            "event_id": eid.astype("int64"),
+            key: k.astype("int64"),
+            "ts": pd.to_datetime(ts_us, unit="us"),
+            "bounce_reason": reason,
+        }
     )
 
 
-def dedup_daily_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST2 — daily UV dedup (UniqueVisitApp.java:45-87): keep each key's first
-    event per calendar day. State = seen-dates set (the reference's
-    ValueState<String> lastVisitDate with 24h TTL — TTL is the memory bound,
-    the date compare is the semantics; SURVEY §6a.6).
+def _keyed_state(
+    events: DataFrame,
+    key: str,
+    bucketed: bool,
+    kernel: Callable[..., tuple[State, pd.DataFrame | None]],
+    out_schema: str,
+    state_fields: list[str],
+    wake: Callable[[State], int] | None = None,
+) -> DataFrame:
+    """The one applyInPandasWithState shell over a kernel: load the group's
+    state arrays, hand the kernel the globally sorted batch (None on a
+    timer invocation) and the watermark, store what it returns.
 
-    Emits (key, dt, first_event_id, first_ts)."""
+    Grouping is ``key`` itself or, when ``bucketed``, the hash bucket
+    pmod(xxhash64(key), 4 · stream_shuffle_width()). ``wake`` maps a
+    non-empty state to the group's event-time timer (epoch ms); without it
+    the operator runs with NoTimeout and never reads the watermark."""
+    from pyspark.sql import functions as F
 
-    out_schema = f"{key} long, dt string, first_event_id long, first_ts timestamp"
-    state_schema = "dates string"  # comma-joined seen dates (bounded: days in flight)
+    from gmall_spark.session import stream_shuffle_width
+
+    state_schema = ", ".join(f"{f} array<long>" for f in state_fields)
+    empty = tuple(np.empty(0, dtype="int64") for _ in state_fields)
+    sort_cols = [key, "ts", "event_id"]
 
     def fn(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        seen = set((state.get[0] or "").split(",")) - {""} if state.exists else set()
-        # one global sort over the batch's chunks (see _batch_frame): the
-        # day's FIRST event must be the (ts, event_id) minimum of the whole
-        # batch, not of whichever Arrow chunk happened to arrive first
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            dt = pdf["ts"].dt.strftime("%Y-%m-%d")
-            firsts = pdf[(~dt.duplicated()) & (~dt.isin(seen))]
-            seen.update(dt[~dt.isin(seen)].unique())
-            if len(firsts):
-                yield pd.DataFrame(
-                    {
-                        key: firsts[key],
-                        "dt": dt.loc[firsts.index],
-                        "first_event_id": firsts["event_id"],
-                        "first_ts": firsts["ts"],
-                    }
-                )
-        # bounded state — the reference's 24h TTL (UniqueVisitApp.java:55-59)
-        # as sliding retention: only the latest day and its predecessor can
-        # still receive (bounded-out-of-order) events, older dates are dead.
-        if len(seen) > 2:
-            seen = set(sorted(seen)[-2:])
-        state.update((",".join(sorted(seen)),))
+        st = (
+            tuple(np.asarray(a or (), dtype="int64") for a in state.get)
+            if state.exists
+            else empty
+        )
+        pdf = None if state.hasTimedOut else _batch_frame(pdfs, sort_cols)
+        st, out = kernel(st, pdf, state.getCurrentWatermarkMs() if wake else 0)
+        if len(st[0]):
+            state.update(tuple(a.tolist() for a in st))
+            if wake:
+                state.setTimeoutTimestamp(wake(st))
+        else:
+            state.remove()
+        if out is not None and len(out):
+            yield out
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    group = key
+    if bucketed:
+        group = "_bkt"
+        events = events.withColumn(
+            group, F.pmod(F.xxhash64(F.col(key)), F.lit(4 * stream_shuffle_width()))
+        )
+    timeout = GroupStateTimeout.EventTimeTimeout if wake else GroupStateTimeout.NoTimeout
+    return events.groupBy(group).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", timeout
+    )
+
+
+def fix_is_new_stream(
+    events: DataFrame, key: str = "user_id", bucketed: bool = False
+) -> DataFrame:
+    """ST1 — new/old-visitor repair (BaseLogApp.java:69-94) as keyed state
+    over ``is_new_kernel``; ``bucketed`` picks the hash-bucket grouping.
+    Emits (event_id, key, is_new)."""
+    return _keyed_state(
+        events,
+        key,
+        bucketed,
+        functools.partial(is_new_kernel, key=key),
+        f"event_id long, {key} long, is_new int",
+        ["seen"],
+    )
+
+
+def dedup_daily_stream(
+    events: DataFrame, key: str = "user_id", bucketed: bool = False
+) -> DataFrame:
+    """ST2 — daily UV dedup (UniqueVisitApp.java:45-87) as keyed state over
+    ``daily_first_kernel``; ``bucketed`` picks the hash-bucket grouping.
+    Emits (key, dt, first_event_id, first_ts)."""
+    return _keyed_state(
+        events,
+        key,
+        bucketed,
+        functools.partial(daily_first_kernel, key=key),
+        f"{key} long, dt string, first_event_id long, first_ts timestamp",
+        ["codes"],
     )
 
 
@@ -174,97 +344,22 @@ def detect_bounce_stream(
     entry_type: str = "view",
     timeout_secs: int = 600,
     watermark: str = "2 seconds",
+    bucketed: bool = False,
 ) -> DataFrame:
-    """ST3 — CEP bounce detection with BOTH emit paths
-    (UserJumpDetailApp.java:70-120): an entry event is a bounce if the next
-    event is another entry (match path, emitted on arrival) or if no event
-    arrives within the timeout (timeout path, emitted by the event-time timer
-    — Flink's CEP timeout side-output).
-
-    Within a batch the decision is the batch twin's lead() logic, vectorized
-    (shift). Across batches: state carries the trailing pending entry, and an
-    event-time timer set to pending.ts + timeout emits the timeout-bounce
-    when the watermark passes with no follow-up. Emits
-    (event_id, key, ts, bounce_reason)."""
-
-    out_schema = f"event_id long, {key} long, ts timestamp, bounce_reason string"
-    state_schema = "pending_id long, pending_ts timestamp"
-    cols = ["event_id", key, "ts", "bounce_reason"]
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        k = key_tuple[0]
-        if state.hasTimedOut:
-            pid, pts = state.get
-            state.remove()
-            yield pd.DataFrame([(pid, k, pts, "timeout")], columns=cols)
-            return
-
-        pending = tuple(state.get) if state.exists else None
-        # global sort across chunks (see _batch_frame): the lead() logic
-        # below and the trailing-pending pick are only correct over the
-        # batch's true event-time order — per-chunk sorts concatenated in
-        # Arrow order lost mid-batch timeout bounces at sf10
-        pdf = _batch_frame(pdfs)
-        if pdf is None:
-            if pending is not None:
-                state.update(pending)
-                state.setTimeoutTimestamp(
-                    int(pending[1].timestamp() * 1000) + timeout_secs * 1000
-                )
-            return
-
-        # resolve the carried-over pending entry against the first new event
-        out_frames = []
-        first = pdf.iloc[0]
-        if pending is not None:
-            pid, pts = pending
-            gap = (first["ts"] - pts).total_seconds()
-            if gap > timeout_secs:
-                out_frames.append(pd.DataFrame([(pid, k, pts, "timeout")], columns=cols))
-            elif first["event_type"] == entry_type:
-                out_frames.append(pd.DataFrame([(pid, k, pts, "match")], columns=cols))
-
-        # vectorized lead() within the batch
-        is_entry = pdf["event_type"].eq(entry_type)
-        nxt_ts = pdf["ts"].shift(-1)
-        nxt_entry = is_entry.shift(-1)
-        gap_late = (nxt_ts - pdf["ts"]).dt.total_seconds() > timeout_secs
-        decided = is_entry & nxt_ts.notna()
-        reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
-        reason[decided & gap_late] = "timeout"
-        reason[decided & ~gap_late & nxt_entry.fillna(False).astype(bool)] = "match"
-        hits = pdf[reason.notna()]
-        if len(hits):
-            out_frames.append(
-                pd.DataFrame(
-                    {
-                        "event_id": hits["event_id"],
-                        key: hits[key],
-                        "ts": hits["ts"],
-                        "bounce_reason": reason[reason.notna()],
-                    }
-                )
-            )
-
-        # trailing entry (no follow-up yet) becomes the new pending + timer
-        last = pdf.iloc[-1]
-        if last["event_type"] == entry_type:
-            state.update((int(last["event_id"]), last["ts"]))
-            state.setTimeoutTimestamp(
-                int(last["ts"].timestamp() * 1000) + timeout_secs * 1000
-            )
-        else:
-            state.remove()
-        yield from out_frames
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    """ST3 — CEP bounce detection (UserJumpDetailApp.java:70-120) as keyed
+    state over ``bounce_kernel``, with an event-time timer at the group's
+    earliest pending deadline; ``bucketed`` picks the hash-bucket grouping.
+    Emits (event_id, key, ts, bounce_reason)."""
+    return _keyed_state(
+        events.withWatermark("ts", watermark),
+        key,
+        bucketed,
+        functools.partial(
+            bounce_kernel, key=key, entry_type=entry_type, timeout_secs=timeout_secs
+        ),
+        f"event_id long, {key} long, ts timestamp, bounce_reason string",
+        ["ks", "pids", "ptsus"],
+        wake=lambda st: int(_deadline_ms(st[2], timeout_secs).min()),
     )
 
 
@@ -394,33 +489,43 @@ def gapfill_stream(
     )
 
 
-def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST1 on the Spark 4 transformWithStateInPandas API: the same seen-flag
-    repair as fix_is_new_stream, but with typed per-key ValueState managed by
-    a StatefulProcessor — the closest structural analog to the reference's
-    Flink ValueState code (BaseLogApp.java:69-94), and the forward path for
-    new stateful operators (multiple typed state variables, timers, TTL are
-    first-class on this API).
-
-    Requires `protobuf` (the TWS state-server protocol) — wired up from the
-    image's gcloud-vendored runtime by compat.ensure_protobuf (see its
-    docstring); the applyInPandasWithState twins remain the default
-    production path, and the equivalence test + the streaming_tws_is_new
-    registry entry exercise this one."""
+def _require_protobuf(fallback: str) -> None:
     try:
         import google.protobuf  # noqa: F401
     except ImportError as exc:  # pragma: no cover - env-dependent
         raise ImportError(
             "transformWithStateInPandas needs the protobuf package; use "
-            "fix_is_new_stream (applyInPandasWithState) in this environment"
+            f"{fallback} (applyInPandasWithState) in this environment"
         ) from exc
-    import pandas as pd
 
+
+def _tws_on_rocksdb(events: DataFrame) -> None:
+    # transformWithState runs only on the RocksDB state store (its column-
+    # family model); the default HDFS-backed store can't host it
+    events.sparkSession.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+
+
+def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
+    """ST1 on the Spark 4 transformWithStateInPandas API: ``is_new_kernel``
+    behind typed per-key ValueState managed by a StatefulProcessor — the
+    closest structural analog to the reference's Flink ValueState code
+    (BaseLogApp.java:69-94). The seen flag maps to the kernel's per-key
+    state: [key] when set, empty otherwise.
+
+    Requires `protobuf` (the TWS state-server protocol) — wired up from the
+    image's gcloud-vendored runtime by compat.ensure_protobuf (see its
+    docstring); the applyInPandasWithState shell remains the default
+    production path, and the equivalence test + the streaming_tws_is_new
+    registry entry exercise this one."""
+    _require_protobuf("fix_is_new_stream")
+    from pyspark.sql import types as T
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-    from pyspark.sql import types as T
 
     out_schema = T.StructType(
         [
@@ -429,6 +534,7 @@ def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
             T.StructField("is_new", T.IntegerType()),
         ]
     )
+    sort_cols = [key, "ts", "event_id"]
 
     class IsNewProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -437,29 +543,19 @@ def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
             )
 
         def handleInputRows(self, key_tuple, rows, timerValues):
-            seen = self.seen.exists() and self.seen.get()[0] == 1
-            # one global sort across the TWS chunk iterator — same
-            # order-soundness contract as the GroupState twins
-            pdf = _batch_frame(rows)
-            if pdf is not None:
-                flags = pd.Series(0, index=pdf.index, dtype="int32")
-                if not seen:
-                    flags.iloc[0] = 1
-                    seen = True
-                yield pd.DataFrame(
-                    {"event_id": pdf["event_id"], key: pdf[key], "is_new": flags}
-                )
-            self.seen.update((1 if seen else 0,))
+            was_seen = self.seen.exists() and self.seen.get()[0] == 1
+            seen = np.asarray(key_tuple[:1] if was_seen else (), dtype="int64")
+            (seen,), out = is_new_kernel(
+                (seen,), _batch_frame(rows, sort_cols), 0, key=key
+            )
+            self.seen.update((int(len(seen) > 0),))
+            if out is not None:
+                yield out
 
         def close(self) -> None:
             pass
 
-    # transformWithState runs only on the RocksDB state store (its column-
-    # family model); the default HDFS-backed store can't host it
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_on_rocksdb(events)
     return events.groupBy(key).transformWithStateInPandas(
         IsNewProcessor(),
         outputStructType=out_schema,
@@ -475,31 +571,21 @@ def detect_bounce_tws(
     timeout_secs: int = 600,
     watermark: str = "2 seconds",
 ) -> DataFrame:
-    """ST3 on the transformWithState timer API: the same CEP-with-timeout as
-    detect_bounce_stream (UserJumpDetailApp.java:70-120), but the timeout
-    path runs on FIRST-CLASS event-time timers (handle.registerTimer /
+    """ST3 on the transformWithState timer API: ``bounce_kernel`` behind
+    FIRST-CLASS event-time timers (handle.registerTimer /
     handleExpiredTimer) instead of applyInPandasWithState's single implicit
-    timeout slot. Semantics are identical — match and in-batch timeout
-    decisions emit from handleInputRows; a trailing entry parks one
-    (pending_id, pending_ts) pair in ValueState with a timer at
-    ms-floor(ts)+timeout, and handleExpiredTimer emits the timeout bounce
-    when the watermark passes it.
+    timeout slot. The pending entry lives in ValueState as one
+    (pending_id, pending_us) pair — the kernel's per-key state — with one
+    timer at its deadline; handleExpiredTimer runs the kernel's sweep.
 
-    Why this twin exists: timers are where TWS earns its keep over the
+    Why this adapter exists: timers are where TWS earns its keep over the
     GroupState API (many per key, listable, deletable — a key replacing its
     pending entry deletes the stale timer instead of overwriting a slot),
     and the timer column family is a distinct state shape whose eviction
     the metrics-level test pins (numRowsRemoved must track resolved
     pendings, not history). Requires protobuf + RocksDB store, exactly like
     fix_is_new_tws."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package; use "
-            "detect_bounce_stream (applyInPandasWithState) in this environment"
-        ) from exc
-
+    _require_protobuf("detect_bounce_stream")
     from pyspark.sql import types as T
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -514,8 +600,10 @@ def detect_bounce_tws(
             T.StructField("bounce_reason", T.StringType()),
         ]
     )
-    cols = ["event_id", key, "ts", "bounce_reason"]
-    timeout_ms = timeout_secs * 1000
+    sort_cols = [key, "ts", "event_id"]
+    kernel = functools.partial(
+        bounce_kernel, key=key, entry_type=entry_type, timeout_secs=timeout_secs
+    )
 
     class BounceProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -535,96 +623,47 @@ def detect_bounce_tws(
                 ),
             )
 
-        def _clear(self) -> None:
-            self.pending.clear()
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-
-        def _park(self, event_id: int, ts: pd.Timestamp) -> None:
-            us = int(ts.value // 1_000)
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            self.pending.update((int(event_id), us))
-            self.handle.registerTimer(us // 1000 + timeout_ms)
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            k = key_tuple[0]
-            # global sort across chunks (see _batch_frame) — per-chunk
-            # sorts concatenated in Arrow order lost mid-batch timeouts
-            pdf = _batch_frame(rows)
-            if pdf is None:
-                return
-
-            out_frames = []
-            # resolve the carried-over pending entry against the first new
-            # event — the event-time gap decides before any watermark does
+        def _step(self, k, pdf, wm_ms: int, fired: bool):
             if self.pending.exists():
                 pid, pus = self.pending.get()
-                pts = pd.Timestamp(pus * 1_000)
-                gap = (pdf.iloc[0]["ts"] - pts).total_seconds()
-                if gap > timeout_secs:
-                    out_frames.append(
-                        pd.DataFrame([(pid, k, pts, "timeout")], columns=cols)
-                    )
-                elif pdf.iloc[0]["event_type"] == entry_type:
-                    out_frames.append(
-                        pd.DataFrame([(pid, k, pts, "match")], columns=cols)
-                    )
-
-            # vectorized lead() within the batch — identical to the
-            # applyInPandasWithState twin
-            is_entry = pdf["event_type"].eq(entry_type)
-            nxt_ts = pdf["ts"].shift(-1)
-            nxt_entry = is_entry.shift(-1)
-            gap_late = (nxt_ts - pdf["ts"]).dt.total_seconds() > timeout_secs
-            decided = is_entry & nxt_ts.notna()
-            reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
-            reason[decided & gap_late] = "timeout"
-            reason[decided & ~gap_late & nxt_entry.fillna(False).astype(bool)] = "match"
-            hits = pdf[reason.notna()]
-            if len(hits):
-                out_frames.append(
-                    pd.DataFrame(
-                        {
-                            "event_id": hits["event_id"],
-                            key: hits[key],
-                            "ts": hits["ts"],
-                            "bounce_reason": reason[reason.notna()],
-                        }
-                    )
-                )
-
-            last = pdf.iloc[-1]
-            if last["event_type"] == entry_type:
-                self._park(last["event_id"], last["ts"])
+                st = tuple(np.array([v], dtype="int64") for v in (k, pid, pus))
             else:
-                self._clear()
-            yield from out_frames
+                st = (np.empty(0, dtype="int64"),) * 3
+            (_, pids, ptsus), out = kernel(st, pdf, wm_ms)
+            if not fired:
+                # the firing timer is auto-removed by the engine, and
+                # deleting it again logs a TimerStateImpl warning
+                for t in self.handle.listTimers():
+                    self.handle.deleteTimer(t)
+            if len(pids):
+                self.pending.update((int(pids[0]), int(ptsus[0])))
+                self.handle.registerTimer(int(_deadline_ms(ptsus, timeout_secs)[0]))
+            else:
+                self.pending.clear()
+            if len(out):
+                yield out
+
+        def handleInputRows(self, key_tuple, rows, timerValues):
+            yield from self._step(
+                key_tuple[0],
+                _batch_frame(rows, sort_cols),
+                timerValues.getCurrentWatermarkInMs(),
+                fired=False,
+            )
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # (named ``key``: the engine invokes this hook with keyword
-            # arguments, unlike handleInputRows.) The engine scans timers
-            # AFTER input processing, so a pending replaced mid-batch
-            # deleted its stale timer and never lands here; the exists()
-            # guard is belt-and-braces for a clear race.
-            if not self.pending.exists():
-                return
-            pid, pus = self.pending.get()
-            # only the value state: the firing timer is auto-removed by the
-            # engine, and deleting it again logs a TimerStateImpl warning
-            self.pending.clear()
-            yield pd.DataFrame(
-                [(pid, key[0], pd.Timestamp(pus * 1_000), "timeout")],
-                columns=cols,
+            # arguments, unlike handleInputRows.) The timer was registered
+            # at the pending's deadline, so the watermark that fired it is
+            # past that deadline: one ms beyond it makes the sweep fire.
+            yield from self._step(
+                key[0], None, expiredTimerInfo.getExpiryTimeInMs() + 1, fired=True
             )
 
         def close(self) -> None:
             pass
 
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_on_rocksdb(events)
     return (
         events.withWatermark("ts", watermark)
         .groupBy(key)
@@ -633,349 +672,5 @@ def detect_bounce_tws(
             outputStructType=out_schema,
             outputMode="append",
             timeMode="eventTime",
-        )
-    )
-
-
-def dedup_daily_bucketed_stream(
-    events: DataFrame, key: str = "user_id", n_buckets: int | None = None
-) -> DataFrame:
-    """ST2 with KEY-COARSENED state — the 100 TB shape of dedup_daily_stream.
-
-    applyInPandasWithState invokes the Python function once per GROUP per
-    micro-batch, so keying state by the raw entity id costs one Python call
-    per active entity (~300k calls/batch at sf10 — measured as the dominant
-    cost of streaming_mb_unique_visit's 108 s sf10 row; the width A/B in
-    BENCH_r06_sf10_streaming.json showed no knob fixes it because the calls,
-    not the partitions, are the bottleneck). This twin groups by
-    hash(key) % n_buckets instead and keeps each bucket's seen set as ONE
-    state row of int64 codes (user·2¹⁶ + epoch-day — day fits 16 bits until
-    year 2149), so a batch pays n_buckets Python calls total, independent of
-    the entity count. Semantics are IDENTICAL to the per-key twin (same
-    first-touch-per-(user, day) emission in the same micro-batch, asserted
-    bit-exact by the equivalence test and the shared oracle): within a
-    bucket the batch is sorted by (ts, event_id) and deduped per code, which
-    coincides with each user's own event-time order.
-
-    Retention mirrors the per-key twin's two-day window, but bounded by the
-    bucket's MAX day rather than per user (codes older than max-1 day are
-    dropped): with time-ordered arrival (the chunked sources here; Kafka
-    per-partition order in the reference) no new event can be older than
-    that, so the trim is emission-invariant — and it is the stronger memory
-    bound, because a dormant user's dead days don't linger.
-
-    The trade: per-bucket state rows are wider (the whole seen set
-    serializes through Arrow every batch instead of one tiny row per
-    touched key). n_buckets controls that balance — default 4× the pandas
-    width, keeping rows ~thousands of codes at bench scales while the call
-    count stays in the hundreds. Flink has no analog knob (its keyed state
-    is JVM-side per-key with no per-group invocation cost); this is a
-    Python-runtime-specific scale technique, which is exactly why it gets
-    its own registry entry instead of replacing the faithful per-key twin.
-    """
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"{key} long, dt string, first_event_id long, first_ts timestamp"
-    state_schema = "codes array<long>"
-    _DAY_BITS = 1 << 16
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0] or ()) if state.exists else set()
-        # global sort across chunks (see _batch_frame): within a bucket the
-        # per-(user, day) FIRST must be the batch-wide (ts, event_id) min
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            day = pdf["ts"].to_numpy().astype("datetime64[D]").astype("int64")
-            code = pd.Series(
-                pdf[key].to_numpy() * _DAY_BITS + day, index=pdf.index
-            )
-            fresh = pdf[(~code.duplicated()) & (~code.isin(seen))]
-            seen.update(code.loc[fresh.index].tolist())
-            if len(fresh):
-                yield pd.DataFrame(
-                    {
-                        key: fresh[key],
-                        "dt": fresh["ts"].dt.strftime("%Y-%m-%d"),
-                        "first_event_id": fresh["event_id"],
-                        "first_ts": fresh["ts"],
-                    }
-                )
-        if seen:
-            horizon = max(c % _DAY_BITS for c in seen) - 1
-            seen = {c for c in seen if c % _DAY_BITS >= horizon}
-        state.update((sorted(seen),))
-
-    return (
-        events.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def detect_bounce_bucketed_stream(
-    events: DataFrame,
-    key: str = "user_id",
-    entry_type: str = "view",
-    timeout_secs: int = 600,
-    watermark: str = "2 seconds",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """ST3 with KEY-COARSENED state — the bucketed-seen-set pattern
-    (dedup_daily_bucketed_stream) extended to the CEP operator, the first
-    of the family that needs TIMERS: per-key pending entries live as three
-    parallel arrays (key, pending_id, pending_ts-micros) in ONE state row
-    per hash bucket, so a micro-batch costs n_buckets Python invocations
-    instead of one per active entity (the measured bottleneck of
-    streaming_mb_bounce's 140-228 s sf10 rows).
-
-    The per-key event-time timer becomes one bucket timer at the MIN
-    pending deadline plus an explicit watermark sweep: every invocation
-    (input or timeout) emits exactly the pendings with
-    ``watermark > ms(ts) + timeout`` — the same STRICTLY-beyond predicate
-    Spark applies when firing the per-key twin's timers, read from
-    ``state.getCurrentWatermarkMs()``. The sweep must run on the INPUT path
-    too: a bucket that receives any event is not eligible for a timeout
-    invocation that batch, yet per-key twins of its OTHER keys would fire —
-    without the sweep those emissions arrive a batch late and the
-    emit_batch equivalence breaks.
-
-    In-batch decisions are the per-key twin's vectorized lead() logic run
-    per key via groupby shifts (sort by (key, ts, event_id)); carried
-    pendings resolve against each key's FIRST batch event with the same
-    integer-microsecond gap comparison; each key's trailing entry becomes
-    its new pending. Bit-exact emission equivalence against
-    detect_bounce_stream — batch-for-batch, both emit paths — is asserted
-    by the twin test and the shared multi-batch oracle."""
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"event_id long, {key} long, ts timestamp, bounce_reason string"
-    state_schema = "ks array<long>, pids array<long>, ptsus array<long>"
-    cols = ["event_id", key, "ts", "bounce_reason"]
-    tmo_ms = timeout_secs * 1000
-    tmo_us = timeout_secs * 1_000_000
-
-    import numpy as np
-
-    _EMPTY = np.empty(0, dtype="int64")
-
-    def _load(state: GroupState):
-        # state as three aligned int64 arrays (key, pending_id, pending_ts µs)
-        if not state.exists:
-            return _EMPTY, _EMPTY, _EMPTY
-        ks, pids, ptsus = state.get
-        return (
-            np.asarray(ks or (), dtype="int64"),
-            np.asarray(pids or (), dtype="int64"),
-            np.asarray(ptsus or (), dtype="int64"),
-        )
-
-    def _frame(pids, ks, ptsus, reason) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series(pids, dtype="int64"),
-                key: pd.Series(ks, dtype="int64"),
-                "ts": pd.to_datetime(ptsus, unit="us"),
-                "bounce_reason": reason,
-            }
-        )
-
-    def _store(state: GroupState, ks, pids, ptsus) -> None:
-        if len(ks):
-            order = np.argsort(ks, kind="stable")
-            ks, pids, ptsus = ks[order], pids[order], ptsus[order]
-            state.update((ks.tolist(), pids.tolist(), ptsus.tolist()))
-            state.setTimeoutTimestamp(int(ptsus.min()) // 1000 + tmo_ms)
-        else:
-            state.remove()
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ks, pids, ptsus = _load(state)
-        wm_ms = state.getCurrentWatermarkMs()
-        chunks = None if state.hasTimedOut else [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            # timeout invocation, or an input invocation with no rows:
-            # fire every pending the watermark has passed
-            due = wm_ms > (ptsus // 1000 + tmo_ms)
-            frame = _frame(pids[due], ks[due], ptsus[due], "timeout") if due.any() else None
-            keep = ~due
-            _store(state, ks[keep], pids[keep], ptsus[keep])
-            if frame is not None:
-                yield frame
-            return
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        # positional index: chunk concat repeats labels, and the array
-        # lookups below assume index == position
-        pdf = pdf.sort_values([key, "ts", "event_id"], kind="mergesort").reset_index(drop=True)
-        kcol = pdf[key].to_numpy()
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-        eid = pdf["event_id"].to_numpy()
-        entry_m = pdf["event_type"].eq(entry_type).to_numpy()
-
-        # per-key first/last positions (rows are key-sorted; uniq ascends)
-        uniq, first_pos = np.unique(kcol, return_index=True)
-        last_pos = len(kcol) - 1 - np.unique(kcol[::-1], return_index=True)[1]
-
-        out_frames = []
-        # classify carried pendings: present keys resolve against their
-        # FIRST batch event; absent keys whose deadline the watermark passed
-        # fire here — their per-key twins' timers fire this batch, but this
-        # bucket got input so no timeout invocation comes (see docstring)
-        if len(ks):
-            idx = np.searchsorted(uniq, ks)
-            present = uniq[np.minimum(idx, len(uniq) - 1)] == ks
-            absent_due = (~present) & (wm_ms > ptsus // 1000 + tmo_ms)
-            if absent_due.any():
-                out_frames.append(
-                    _frame(pids[absent_due], ks[absent_due], ptsus[absent_due], "timeout")
-                )
-            if present.any():
-                pi = idx[present]
-                gap = ts_us[first_pos[pi]] - ptsus[present]
-                t_m = gap > tmo_us
-                m_m = (~t_m) & entry_m[first_pos[pi]]
-                for mask, why in ((t_m, "timeout"), (m_m, "match")):
-                    if mask.any():
-                        out_frames.append(
-                            _frame(
-                                pids[present][mask],
-                                ks[present][mask],
-                                ptsus[present][mask],
-                                why,
-                            )
-                        )
-            keep = (~present) & (~absent_due)
-        else:
-            keep = np.zeros(0, dtype=bool)
-
-        # vectorized lead() per key within the batch: rows are sorted by
-        # (key, ts, event_id), so row i+1 is the same key's next event iff
-        # the key doesn't change there
-        n = len(kcol)
-        nxt_same = np.zeros(n, dtype=bool)
-        nxt_same[:-1] = kcol[1:] == kcol[:-1]
-        # zeros (not empty): the last element never survives the `decided`
-        # mask, but it still flows through the (nxt_ts - ts_us) subtraction —
-        # an uninitialized int64 there can trip numpy overflow warnings
-        nxt_ts = np.zeros(n, dtype="int64")
-        nxt_ts[:-1] = ts_us[1:]
-        nxt_entry = np.zeros(n, dtype=bool)
-        nxt_entry[:-1] = entry_m[1:]
-        decided = entry_m & nxt_same
-        t_hits = decided & ((nxt_ts - ts_us) > tmo_us)
-        m_hits = decided & ~t_hits & nxt_entry
-        hits = t_hits | m_hits
-        if hits.any():
-            out_frames.append(
-                pd.DataFrame(
-                    {
-                        "event_id": eid[hits],
-                        key: kcol[hits],
-                        "ts": pdf["ts"].to_numpy()[hits],
-                        "bounce_reason": np.where(t_hits[hits], "timeout", "match"),
-                    }
-                )
-            )
-
-        # each key's trailing entry becomes its new pending (disjoint from
-        # the kept pendings — those keys are absent from the batch)
-        l_entry = entry_m[last_pos]
-        _store(
-            state,
-            np.concatenate([ks[keep], uniq[l_entry]]),
-            np.concatenate([pids[keep], eid[last_pos][l_entry]]),
-            np.concatenate([ptsus[keep], ts_us[last_pos][l_entry]]),
-        )
-        yield from out_frames
-
-    return (
-        events.withWatermark("ts", watermark)
-        .withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def fix_is_new_bucketed_stream(
-    events: DataFrame, key: str = "user_id", n_buckets: int | None = None
-) -> DataFrame:
-    """ST1 with KEY-COARSENED state — dedup_daily_bucketed_stream's pattern
-    applied to the is_new repair, proving the technique generalizes beyond
-    one operator: group by hash(key) % n_buckets and keep the bucket's
-    ever-seen key ids as one array<long> state row, so a micro-batch costs
-    n_buckets Python invocations instead of one per active entity (the
-    measured bottleneck of the per-key twins at sf10 — see
-    BENCH_r06_bucketed_state.json).
-
-    Emission is identical to fix_is_new_stream: within a bucket the batch
-    is sorted by (ts, event_id), and a key's first-ever event (first
-    occurrence in batch AND not in the seen set) keeps is_new=1. Restricted
-    to one key, the bucket's sort order IS that key's event-time order, so
-    first-occurrence coincides per key.
-
-    State volume equals the per-key twin's (one int64 per ever-seen key
-    either way — there is no two-day horizon to trim here, exactly like the
-    per-key version whose store keeps one row per key forever); the
-    re-packing trades per-group invocation cost for re-serializing each
-    TOUCHED bucket's array every batch. n_buckets is the balance knob: at
-    ~1e9 keys per bucket-arrays would be ~30 MB at the default, so a
-    cluster deployment raises n_buckets with the key universe (state stays
-    sharded across width partitions regardless)."""
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"event_id long, {key} long, is_new int"
-    state_schema = "uids array<long>"
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0] or ()) if state.exists else set()
-        # global sort across chunks (see _batch_frame): within a bucket a
-        # key's first-EVER event must be the batch-wide (ts, event_id) min
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            uid = pdf[key]
-            first = (~uid.duplicated()) & (~uid.isin(seen))
-            seen.update(uid[first].tolist())
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"],
-                    key: uid,
-                    "is_new": first.astype("int32"),
-                }
-            )
-        state.update((sorted(seen),))
-
-    return (
-        events.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )

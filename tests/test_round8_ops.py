@@ -1,5 +1,5 @@
-"""Round-8 unit tests: bench re-measure gate, scratch auto-root, bucketed
-dispatch, the float32-prefilter candidate helper, and LPA vote packing.
+"""Round-8 unit tests: bench re-measure gate, scratch auto-root, the
+float32-prefilter candidate helper, and LPA vote packing.
 
 All pure-Python/numpy — no SparkSession needed (the Spark-side behavior of
 the touched operators is covered by the oracle-parity gate and the existing
@@ -59,22 +59,6 @@ def test_scratch_env_override_wins(monkeypatch, tmp_path):
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     assert s.scratch_dir("x").startswith(str(tmp_path))
-
-
-# ---------------------------------------------------------------------------
-# streaming: volume-based bucketed-state dispatch
-# ---------------------------------------------------------------------------
-def test_use_bucketed_state_threshold_and_override(monkeypatch):
-    from gmall_spark.streaming import stateful
-
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_STATE", raising=False)
-    assert not stateful.use_bucketed_state(None)
-    assert not stateful.use_bucketed_state(2 << 20)  # sf0.1-ish
-    assert stateful.use_bucketed_state(220 << 20)  # sf10-ish
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_STATE", "1")
-    assert stateful.use_bucketed_state(0)
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_STATE", "0")
-    assert not stateful.use_bucketed_state(1 << 40)
 
 
 # ---------------------------------------------------------------------------
@@ -164,12 +148,15 @@ import pytest as _pytest
         "streaming_mb_ewma",
         "streaming_mb_bucketed_uv",
         "streaming_mb_bucketed_is_new",
+        "streaming_mb_bucketed_bounce",
+        "streaming_tws_bounce",
     ],
 )
 def test_keyed_state_chunk_order_soundness(spark, entry):
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
     import oracle as orc
     import __spark_entry__ as entrymod
 

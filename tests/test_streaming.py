@@ -711,53 +711,47 @@ def test_dynamic_session_window_state_bounded(spark):
 
 
 def test_dedup_daily_bucketed_matches_per_key(spark, chunked_events):
-    """The key-coarsened (bucketed-state) dedup must be BIT-identical to the
-    per-key twin on the same chunk schedule — same (user, day) firsts, same
-    rows, carried across batch boundaries by the coded seen-sets exactly as
-    per-key state carries its date strings. (The registry's mb entry
-    additionally pins emit_batch equality through the shared oracle.)"""
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
-
+    """The hash-bucket grouping of the daily dedup must be BIT-identical to
+    the per-key grouping on the same chunk schedule — same (user, day)
+    firsts, same rows, carried across batch boundaries by the coded seen
+    sets either way. (The registry's mb entry additionally pins emit_batch
+    equality through the shared oracle.)"""
     cols = ["user_id", "dt", "first_event_id", "first_ts"]
     per_key = run_to_memory(
         dedup_daily_stream(read_stream(spark, chunked_events)), "t_uv_pk"
     )
     bucketed = run_to_memory(
-        dedup_daily_bucketed_stream(read_stream(spark, chunked_events)), "t_uv_bk"
+        dedup_daily_stream(read_stream(spark, chunked_events), bucketed=True), "t_uv_bk"
     )
     assert rows_set(bucketed, cols) == rows_set(per_key, cols)
 
 
 def test_detect_bounce_bucketed_matches_per_key(spark, chunked_events):
-    """The key-coarsened CEP bounce (bucketed pending-map state + one
-    min-deadline timer per bucket with a watermark sweep) must be
-    bit-identical to the per-key twin on the same chunk schedule — BOTH
-    emit paths: in-batch match/timeout, cross-batch pending resolution,
-    and timer-fired timeouts. (The registry's mb entry additionally pins
-    emit_batch equality through the shared oracle.)"""
-    from gmall_spark.streaming.stateful import detect_bounce_bucketed_stream
-
+    """The hash-bucket grouping of the CEP bounce (pending arrays per
+    bucket + one min-deadline timer per bucket with a watermark sweep) must
+    be bit-identical to the per-key grouping on the same chunk schedule —
+    BOTH emit paths: in-batch match/timeout, cross-batch pending
+    resolution, and timer-fired timeouts. (The registry's mb entry
+    additionally pins emit_batch equality through the shared oracle.)"""
     cols = ["event_id", "user_id", "ts", "bounce_reason"]
     per_key = run_to_memory(
         detect_bounce_stream(read_stream(spark, chunked_events)), "t_bn_pk"
     )
     bucketed = run_to_memory(
-        detect_bounce_bucketed_stream(read_stream(spark, chunked_events)), "t_bn_bk"
+        detect_bounce_stream(read_stream(spark, chunked_events), bucketed=True), "t_bn_bk"
     )
     assert rows_set(bucketed, cols) == rows_set(per_key, cols)
 
 
 def test_fix_is_new_bucketed_matches_per_key(spark, chunked_events):
-    """The bucketed-seen-set is_new repair must be bit-identical to the
-    per-key twin on the same chunk schedule — the pattern-generalization
-    proof (same contract as the bucketed dedup test above)."""
-    from gmall_spark.streaming.stateful import fix_is_new_bucketed_stream
-
+    """The hash-bucket grouping of the is_new repair must be bit-identical
+    to the per-key grouping on the same chunk schedule (same contract as
+    the bucketed dedup test above)."""
     cols = ["event_id", "user_id", "is_new"]
     per_key = run_to_memory(
         fix_is_new_stream(read_stream(spark, chunked_events)), "t_in_pk"
     )
     bucketed = run_to_memory(
-        fix_is_new_bucketed_stream(read_stream(spark, chunked_events)), "t_in_bk"
+        fix_is_new_stream(read_stream(spark, chunked_events), bucketed=True), "t_in_bk"
     )
     assert rows_set(bucketed, cols) == rows_set(per_key, cols)

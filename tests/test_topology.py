@@ -1,0 +1,79 @@
+"""Unit tests for the warehouse topology's drain and sentinel helpers (no
+Spark: stub listener events, stub queries, plain files)."""
+
+from __future__ import annotations
+
+import os
+from datetime import datetime
+from types import SimpleNamespace
+
+import pytest
+
+from gmall_spark.streaming.topology import (
+    _IDLE_STREAK,
+    _copy_chunks,
+    _drain,
+    _write_sentinel,
+)
+
+
+def test_sentinels_sort_after_every_chunk(tmp_path):
+    """The file source takes files oldest-mtime-first, so the flush
+    sentinels must sort after every real chunk. With >= 11 chunks spaced
+    10 s apart, a fixed base+100 s sentinel mtime would tie or sort before
+    the later chunks; deriving it from the newest chunk's mtime cannot."""
+    shared, src = tmp_path / "shared", tmp_path / "src"
+    shared.mkdir()
+    src.mkdir()
+    n_batches = 12
+    for i in range(n_batches):
+        (shared / f"part-{i:03d}.parquet").write_bytes(b"x")
+    newest = _copy_chunks(str(shared), str(src))
+    ts = datetime(2021, 1, 1)
+    _write_sentinel(str(src), "b_window_close", ts, 1, newest)
+    _write_sentinel(str(src), "a_timer_flush", ts, 0, newest)
+
+    by_mtime = sorted(os.listdir(src), key=lambda f: os.path.getmtime(src / f))
+    assert len(set(os.path.getmtime(src / f) for f in by_mtime)) == n_batches + 2
+    assert by_mtime[-2:] == [
+        "zz_sentinel_a_timer_flush.parquet",
+        "zz_sentinel_b_window_close.parquet",
+    ]
+    assert by_mtime[:-2] == sorted(os.listdir(shared))
+
+
+class _DeadQuery:
+    """A query that terminated: any py4j-style access is an error."""
+
+    def __init__(self, run_id: str) -> None:
+        self.runId = run_id
+
+    @property
+    def lastProgress(self):
+        raise AssertionError("belt read lastProgress of a terminated query")
+
+    @property
+    def status(self):
+        raise AssertionError("belt read status of a terminated query")
+
+
+class _Streams:
+    """Stub spark.streams: on registration, the listener sees every query
+    reach the idle streak and then one query terminate — the window between
+    the streak wait and the belt's py4j calls."""
+
+    def addListener(self, watch) -> None:
+        for rid in list(watch._streaks):
+            for _ in range(_IDLE_STREAK):
+                watch.onQueryIdle(SimpleNamespace(runId=rid))
+        watch.onQueryTerminated(SimpleNamespace(runId="q2", exception="boom"))
+
+    def removeListener(self, watch) -> None:
+        pass
+
+
+def test_drain_rechecks_termination_before_belt():
+    spark = SimpleNamespace(streams=_Streams())
+    queries = [_DeadQuery("q1"), _DeadQuery("q2")]
+    with pytest.raises(RuntimeError, match="q2 terminated during drain: boom"):
+        _drain(queries, 0.3, 5.0, spark=spark)
