@@ -1,5 +1,6 @@
-"""Graph analytics over relational edges — PageRank as the canonical
-iterative algorithm (connected components lives in extras/dedup.py).
+"""Graph analytics over relational edges: PageRank, triangle counts,
+common neighbors, k-core, label propagation (LPA), BFS and weighted SSSP
+(connected components lives in extras/dedup.py).
 
 Determinism & engine parity: floating-point PageRank is summation-order
 dependent, so a distributed run never hashes equal to a single-node oracle.
@@ -9,26 +10,39 @@ integer arithmetic — `rank div out_degree` contributions, damping as
 bit after any number of rounds. Positive operands make floor and truncating
 integer division identical across engines.
 
-Scale: the graph is grouped ONCE into a persisted adjacency table
-(src, out_deg, dsts[]) that keeps hash(src) partitioning in the cache; each
-round is then a NODE-sized equi-join with the current rank table (ranks
-arrive already partitioned by node from the previous round's groupBy, so the
-join plans zero edge-sized exchanges) + a codegen explode + one sum-groupBy
-on dst — one edge-sized shuffle per round instead of the two the row-edge
-formulation pays (the per-round 120M-row sort-merge was the measured
-dominator: sf10 166.8s row-edges vs 44.0s adjacency, identical ranks).
-Celebrity-node safety: the opt-in ``adj_chunk`` build caps dsts per row via
-pmod(xxhash64(dst), ceil(deg/chunk)) — a 100M-degree node becomes ~1.5k
-bounded rows, not one 800MB array — and because the chunk key contains src,
-the chunking groupBy rides the same hash(src) exchange (no extra shuffle,
-cache partitioning preserved). Rounds are unrolled into the plan
-(fixed iteration count keeps the oracle expressible as chained CTEs; for
-unbounded convergence checkpoint every ~10 rounds to cut lineage).
+Scale: the edge list is grouped ONCE into a persisted adjacency table
+(src, dsts[], plus out_deg for PageRank) whose cache keeps hash(src) partitioning, so no round joins
+the edge list. Each PageRank / LPA round then delivers its per-node
+messages (rank contributions, labels) in one of two ways:
+
+- gather — the regime at every scale the repo runs. On a symmetric graph
+  the messages node v receives are exactly those of its own dsts, so the
+  node-sized message table is broadcast, every exploded dst looks its
+  message up, and the sum / vote count aggregates by src on the cache's
+  own partitioning: no per-round Exchange at all (sf100: 1.18B edge rows
+  never leave their partition).
+- scatter — when the node table does not fit the driver's broadcast budget
+  (``_fits_broadcast``): join the messages to the adjacency by src, explode,
+  and aggregate by dst — one edge-sized Exchange per round.
+
+LPA packs key pairs into single int64s: the mode pick is max((c << 32) +
+(2^32-1-lab)), which orders exactly like (count desc, label asc) and stays
+a hash aggregate, and the scatter shuffle key is (dst << 32) + lab, one
+long instead of two. Both codes need node ids in [0, 2^31);
+label_communities checks that in the job that counts the nodes and raises
+ValueError past it. Trade-graph ids are 2·custkey and 2·suppkey+1, so the
+bound is custkey < 2^30 — about sf7158 at 150k customers per scale unit.
+
+Celebrity-node safety: pagerank's opt-in ``adj_chunk`` build caps dsts per
+row via pmod(xxhash64(dst), ceil(deg/chunk)); the chunking groupBy rides
+the same hash(src) exchange. Rounds are unrolled into the plan (a fixed
+iteration count keeps the oracle expressible as chained CTEs) and
+lineage-truncated per round where the plan would otherwise nest.
 """
 
 from __future__ import annotations
 
-import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +58,7 @@ BASE = SCALE - SCALE * DAMP_NUM // DAMP_DEN  # (1-d) teleport mass = 150000
 #: with each iterative round's PRE-checkpoint frame. localCheckpoint truncates
 #: lineage, so the returned frame's explain() cannot show the per-round join/
 #: exchange shape — tools/dump_plans.py --rounds sets this to dump round-k
-#: plans as committable artifacts (the r8 verdict's LPA evidence gap).
+#: plans as committable artifacts.
 #: Zero-cost when None (the default).
 ROUND_PLAN_HOOK = None
 
@@ -54,18 +68,30 @@ def _round_plan(kernel: str, round_no: int, df: DataFrame) -> None:
         ROUND_PLAN_HOOK(kernel, round_no, df)
 
 
-#: node-count ceiling for the broadcast-votes regime of the iterative kernels
-#: (LPA labels / PageRank contributions are 2 longs per node: 64M nodes is
-#: ~1 GiB of built hash relation — inside the 4g driver maxResultSize and the
-#: 8 GiB broadcast cap with margin). Above it the kernels keep the packed
-#: per-round shuffle. Env-tunable for clusters with bigger driver heaps.
-_GRAPH_BCAST_MAX_NODES = 64_000_000
+#: Driver bytes per node of a broadcast message table (LPA labels / PageRank
+#: contributions, two longs per row). The built relation is what the
+#: BroadcastExchange "data size" metric reports: 1258.4 KiB for the 15,999-row
+#: label table at sf0.1 (81 B/node; synthetic 1M-4M-row tables: 50 B/node on
+#: dense even ids, 67 B/node on hashed ids). While it builds, the driver
+#: also holds the collected rows, 28 B/node (24 B UnsafeRow + 4 B length).
+#: 81 + 28 = 109, rounded up.
+_BCAST_BYTES_PER_NODE = 128
+#: Spark's hard ceiling on one broadcast table (BroadcastExchangeExec).
+_BCAST_TABLE_CAP = 8 << 30
+_UNIT_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 
-def _graph_bcast_max_nodes() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_GRAPH_BCAST_NODES", _GRAPH_BCAST_MAX_NODES)
-    )
+def _fits_broadcast(spark: SparkSession, n_nodes: int) -> bool:
+    """True when an ``n_nodes``-row message table can be broadcast: its
+    driver footprint (``_BCAST_BYTES_PER_NODE``) must fit half of
+    min(spark.driver.maxResultSize, the 8 GiB broadcast cap), leaving the
+    other half for the relation's power-of-two growth steps and the rest of
+    the driver's results. maxResultSize 0 means unlimited. At the session's
+    4g that admits 16.7M nodes; the sf100 trade graph has ~16M."""
+    size = spark.conf.get("spark.driver.maxResultSize", "1g")
+    num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", size.strip().lower()).groups()
+    limit = int(num) << _UNIT_SHIFT[unit] or _BCAST_TABLE_CAP
+    return n_nodes * _BCAST_BYTES_PER_NODE <= min(limit, _BCAST_TABLE_CAP) // 2
 
 
 def pagerank(
@@ -102,8 +128,8 @@ def pagerank(
     edge-cardinality Exchange disappears (guide §8 — decide/shuffle on the
     lightweight proxy, never move the edge payload). Bit-identical to the
     scatter path: contribution multisets per node are equal by symmetry and
-    the arithmetic is integer (order-free). Applied when the node count fits
-    the broadcast regime (_graph_bcast_max_nodes) and the adjacency is
+    the arithmetic is integer (order-free). Applied when the node table fits
+    the broadcast budget (_fits_broadcast) and the adjacency is
     unchunked (chunk rows duplicate out_deg, which the gather's contribution
     build must not); past either bound the scatter path stands.
     """
@@ -164,7 +190,7 @@ def pagerank(
     gather = (
         symmetric
         and adj_chunk is None
-        and adj.count() <= _graph_bcast_max_nodes()
+        and _fits_broadcast(edges.sparkSession, adj.count())
     )
     for rnd in range(1, rounds + 1):
         if gather:
@@ -241,21 +267,25 @@ def _oracle() -> str:
     return head + body + f"\n    SELECT node, rank FROM r{_PR_ROUNDS}"
 
 
-@register("pagerank_trade", _oracle())
-def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer↔supplier trade graph as symmetrized directed edges
+    (src, dst): every orders⋈lineitem row exploded into its two roles
+    c→s and s→c, node ids custkey·2 / suppkey·2+1.
+
+    NOT deduplicated: every consumer builds its adjacency with collect_set,
+    which dedups inside the one exchange that build needs anyway (at sf100
+    the 600M join rows hold 590M distinct pairs, so a standalone distinct
+    would be a full-width Exchange removing ~2%). The explode is a codegen
+    Generate in the join's own stage — one o⋈l pass and no materialized
+    pair set, where a union of two projections runs the join twice or
+    needs the pairs checkpointed first (483 s at sf100)."""
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
-    # Raw pairs, symmetrized INLINE (explode into both directed roles) —
-    # the old shape (distinct → union of two projections → pagerank's own
-    # distinct) ran the o⋈l join TWICE (once per un-checkpointed union
-    # branch) and paid two redundant full-edge distinct Exchanges before
-    # the adjacency's; pagerank's collect_set build dedups inside the one
-    # exchange that remains (same LPA build fusion, guide §2.4).
     pairs = o.join(l, o.o_orderkey == l.l_orderkey).select(
         (F.col("o_custkey") * 2).alias("c_node"),
         (F.col("l_suppkey") * 2 + 1).alias("s_node"),
     )
-    edges = pairs.select(
+    return pairs.select(
         F.explode(
             F.array(
                 F.struct(F.col("c_node").alias("src"), F.col("s_node").alias("dst")),
@@ -263,7 +293,13 @@ def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    return pagerank(edges, "src", "dst", rounds=_PR_ROUNDS, symmetric=True)
+
+
+@register("pagerank_trade", _oracle())
+def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return pagerank(
+        _trade_edges(spark, sf_dir), "src", "dst", rounds=_PR_ROUNDS, symmetric=True
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -598,15 +634,27 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bipartite graph (exactly this shape) flips the two partitions' labels
 # every round and never settles.
 #
-# Scale shape per round: a NODE-sized equi-join of the persisted adjacency
-# table (same partition-pinned build as pagerank's) against the label table,
-# a codegen explode, then one (node, label) count + one mode-pick aggregate —
-# one edge-sized shuffle per round; synchronous LPA is the variant that
-# parallelizes (asynchronous LPA's sequential sweep does not shard). Fixed
-# round count, not convergence-polled: LPA oscillates on bipartite graphs
-# (exactly this shape), so production runs cap rounds anyway.
+# Scale shape per round: one vote count per (node, label) and one packed
+# mode pick, with the votes delivered by gather or scatter (module
+# docstring); synchronous LPA is the variant that parallelizes
+# (asynchronous LPA's sequential sweep does not shard). Fixed round count,
+# not convergence-polled: LPA oscillates on bipartite graphs (exactly this
+# shape), so production runs cap rounds anyway.
 # ---------------------------------------------------------------------------
 _LPA_ROUNDS = 3
+_LOW32 = (1 << 32) - 1
+#: Node ids must lie in [0, _ID_BOUND) for the packed vote codes below.
+_ID_BOUND = 1 << 31
+#: Mode pick as ONE hash-aggregable max(int64): a max over a (count, -lab)
+#: struct plans as Sort + SortAggregate, a max over a long does not. With
+#: c < 2^31 and lab in [0, 2^31) the high word orders by count and the low
+#: word by the label's complement, so the max is (count desc, label asc).
+_PICK_CODE = f"(c << 32) + ({_LOW32} - lab)"
+_PICK_LABEL = f"{_LOW32} - (m & {_LOW32})"
+#: Scatter shuffle key: (dst, lab) as one long instead of two.
+_EDGE_CODE = "(dst << 32) + lab"
+_EDGE_NODE = "code >> 32"
+_EDGE_LABEL = f"code & {_LOW32}"
 
 
 def _lpa_oracle() -> str:
@@ -649,184 +697,81 @@ def _lpa_oracle() -> str:
 
 @register("label_communities", _lpa_oracle())
 def label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    # RAW pairs — no standalone distinct. The r9 sf100 phase profile put 93%
-    # of the kernel's wall in the BUILD (pairs-distinct checkpoint 483 s +
-    # adjacency exchange 412 s vs 65 s for all vote rounds after the gather
-    # rewrite), and the distinct barely deduplicates here (sf100: 600M join
-    # rows → 590M distinct pairs, ~2%). Dedup moves INTO the adjacency's own
-    # exchange below (collect_set), deleting the full-width distinct
-    # Exchange + its hash dedup outright (guide §2.4: share one exchange).
-    pairs = o.join(l, o.o_orderkey == l.l_orderkey).select(
-        (F.col("o_custkey") * 2).alias("c_node"),
-        (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-    )
-    from gmall_spark.session import iter_checkpoint
-
-    # Symmetrize INLINE (explode each pair into its two directed roles)
-    # instead of a union of two projections: the union shape needed the
-    # pair set checkpointed first so the join would not run twice, and that
-    # checkpoint was the single most expensive phase of the r9 sf100
-    # profile (483 s to materialize 590M rows the next job immediately
-    # re-read). The explode is a codegen Generate in the SAME stage as the
-    # join output — one o⋈l pass, zero intermediate materialization, and
-    # the one exchange that remains is the adjacency's own (guide §1.2
-    # step 1: don't materialize what one pass can stream).
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("c_node").alias("src"), F.col("s_node").alias("dst")),
-                F.struct(F.col("s_node").alias("src"), F.col("c_node").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    # Adjacency table, same shape as pagerank's: one exchange builds it, the
-    # cache keeps hash(src) partitioning, and each round's label join is
-    # node-sized (the edge-sized join was the round dominator). collect_SET
-    # (not list) deduplicates the raw pairs inside this exchange — every
-    # consumer (array_min, explode+count votes) is order-insensitive and the
-    # old arrays were duplicate-free already, so the set is the same
-    # neighborhood. The self-loop per node (the one inertia vote, see module
-    # comment) is array_append of src onto its own dsts — src never appears
-    # in its own set (the bipartite ids differ in parity), so the closed
-    # neighborhood is unchanged.
-    # SERIALIZED memory+disk (not the deserialized default): the adjacency
-    # is the biggest cache in the repo (~10 GB of array payload at sf100 —
-    # 1.18B symmetrized edges), and the r6 sf100 probe showed it evicting
-    # from MemoryStore and paying a per-round recompute; serialized blocks
-    # are smaller AND eviction degrades to one disk read instead of
-    # re-running the edge exchange. The per-round deserialization cost is
-    # noise next to the explode+agg each round already pays.
     from pyspark import StorageLevel
 
+    from gmall_spark.session import iter_checkpoint, unpersist_with
+
+    # Adjacency, same shape as pagerank's: one exchange builds it and the
+    # cache keeps hash(src) partitioning. collect_SET dedups the raw trade
+    # edges inside that exchange. The self-loop per node (the one inertia
+    # vote, see the section comment) is src appended to its own dsts — src
+    # never appears in its own set (bipartite ids differ in parity), so the
+    # adjacency is the CLOSED neighborhood.
+    # SERIALIZED memory+disk (not the deserialized default): the adjacency
+    # is the biggest cache in the repo (~10 GB of array payload at sf100),
+    # and the r6 sf100 probe showed it evicting from MemoryStore and paying
+    # a per-round recompute; serialized blocks are smaller AND eviction
+    # degrades to one disk read instead of re-running the edge exchange.
     adj = (
-        sym.groupBy("src")
+        _trade_edges(spark, sf_dir)
+        .groupBy("src")
         .agg(F.array_append(F.collect_set("dst"), F.col("src")).alias("dsts"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # One job: the node count sizes the vote delivery, the id range guards
+    # the packed codes.
+    lo, hi, n_nodes = adj.agg(F.min("src"), F.max("src"), F.count(F.lit(1))).first()
+    if n_nodes and not (0 <= lo and hi < _ID_BOUND):
+        adj.unpersist()
+        raise ValueError(
+            f"label_communities packs node ids into 32-bit halves and needs "
+            f"them in [0, 2^31); this graph spans [{lo}, {hi}]"
+        )
     # Round 1 never needs the vote shuffle. With identity initialization
-    # (lab = node id) every incoming vote carries a DISTINCT label: the
-    # neighbor set is duplicate-free (pairs is distinct and symmetrized; the
-    # appended self-id can't collide — bipartite ids differ in parity), so
-    # every (dst, lab) count is exactly 1 and mode-with-min-tiebreak
-    # degenerates to min over the closed neighborhood = array_min(dsts).
-    # That replaces the sweep's single worst exchange — round 1 is the one
-    # round where labels are all-distinct, so its (dst, lab) shuffle gets
-    # ZERO partial-agg compression (full edge cardinality, 1.18B rows at
-    # sf100) — with a node-sized map over the already-persisted adjacency.
+    # (lab = node id) every incoming vote carries a DISTINCT label (the
+    # closed neighborhood is duplicate-free), so every (node, lab) count is
+    # exactly 1 and mode-with-min-tiebreak degenerates to array_min(dsts) —
+    # a node-sized map instead of the one round whose vote shuffle gets zero
+    # partial-agg compression (1.18B rows at sf100).
     round1 = adj.select(F.col("src").alias("node"), F.array_min("dsts").alias("lab"))
     _round_plan("label_communities", 1, round1)
     labels = iter_checkpoint(round1)
-    # Per-round vote delivery. The graph is SYMMETRIC (sym unions both
-    # directions of every distinct pair) and the adjacency is CLOSED (src
-    # appended to its own dsts), so node v's incoming vote multiset
-    # {lab(u) : (u,v) in selfed-edges} equals its outgoing neighborhood's
-    # labels {lab(u) : u in dsts(v)} — vote counts, and hence the
-    # mode-with-min-tiebreak pick, are identical either way. That makes a
-    # GATHER formulation available: broadcast the node-sized label table,
-    # look each exploded dst up in it, and aggregate by src — every step
-    # rides the adjacency cache's hash(src) partitioning, so the per-round
-    # edge-cardinality Exchange (1.18B (dst,lab) rows at sf100, the r7/r8
-    # probes' dominator) disappears outright (guide §8: move the
-    # lightweight proxy — labels, 2 longs/node — never the edge payload).
-    #
-    # Past the broadcast regime (_graph_bcast_max_nodes, env-tunable) the
-    # SCATTER fallback stands: when every node id fits 31 bits, pack
-    # (dst, lab) into ONE int64 (dst<<32 | lab) before the exchange — the
-    # shuffle row narrows from two key longs to one. Node ids here are
-    # 2·custkey / 2·suppkey+1 — 31 bits holds to ~1B customers (beyond
-    # sf10000); past that the unpacked path is the final fallback, same
-    # plan shape, two-long keys.
-    bounds = adj.agg(F.min("src"), F.max("src"), F.count(F.lit(1))).first()
-    packable = (
-        bounds[0] is not None and bounds[0] >= 0 and bounds[1] < (1 << 31)
-    )
-    gather = bounds[2] is not None and bounds[2] <= _graph_bcast_max_nodes()
+    # The graph is symmetric and the adjacency closed, so node v's incoming
+    # votes {lab(u) : v in dsts(u)} are exactly {lab(u) : u in dsts(v)}:
+    # gather and scatter count the same (node, lab) multiset. Every node
+    # votes for itself, so each round's pick covers every node and IS the
+    # next label table — no left join back to the old labels.
+    gather = _fits_broadcast(spark, n_nodes)
     for rnd in range(2, _LPA_ROUNDS + 1):
         if gather:
-            votes = adj.select("src", F.explode("dsts").alias("dst")).join(
-                F.broadcast(labels.select(F.col("node").alias("dst"), "lab")), "dst"
+            counted = (
+                adj.select(F.col("src").alias("node"), F.explode("dsts").alias("dst"))
+                .join(F.broadcast(labels.select(F.col("node").alias("dst"), "lab")), "dst")
+                .groupBy("node", "lab")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-            # mode-with-min-tiebreak as two exchange-free aggregates
-            # (hash(src) satisfies both groupings). The pick covers EVERY
-            # node (the closed neighborhood guarantees at least the self
-            # vote), so it IS the next label table — no left-join/coalesce.
-            counted = votes.groupBy("src", "lab").agg(F.count(F.lit(1)).alias("c"))
-            if packable and bounds[2] < (1 << 31):
-                # argmax(count desc, label asc) as ONE packed-long max: a
-                # max over a struct is not hash-aggregable (it plans as
-                # Sort + SortAggregate — a per-round per-partition sort),
-                # but max(int64) is. c <= n_nodes < 2^31 and lab < 2^31
-                # (packable), so c<<32 | (2^32-1-lab) fits a signed long
-                # and compares exactly like (c desc, lab asc): higher
-                # count wins the high bits; equal counts leave the lower
-                # label as the larger complement.
-                new_labels = (
-                    counted.select(
-                        "src",
-                        (
-                            F.shiftleft(F.col("c"), 32)
-                            + (F.lit((1 << 32) - 1) - F.col("lab"))
-                        ).alias("code"),
-                    )
-                    .groupBy("src")
-                    .agg(F.max("code").alias("m"))
-                    .select(
-                        F.col("src").alias("node"),
-                        (
-                            F.lit((1 << 32) - 1)
-                            - F.col("m").bitwiseAND(F.lit((1 << 32) - 1))
-                        ).alias("lab"),
-                    )
-                )
-            else:
-                new_labels = (
-                    counted.groupBy("src")
-                    .agg(
-                        F.max(
-                            F.struct(F.col("c"), (-F.col("lab")).alias("nl"))
-                        ).alias("m")
-                    )
-                    .select(F.col("src").alias("node"), (-F.col("m.nl")).alias("lab"))
-                )
-            _round_plan("label_communities", rnd, new_labels)
-            labels = iter_checkpoint(new_labels)
-            continue
-        edge_labels = adj.join(
-            labels.select(F.col("node").alias("src"), "lab"), "src"
-        ).select(F.explode("dsts").alias("dst"), "lab")
-        if packable:
-            nbr = (
-                edge_labels.select(
-                    (F.shiftleft(F.col("dst"), 32) + F.col("lab")).alias("code")
-                )
+        else:
+            counted = (
+                adj.join(labels.select(F.col("node").alias("src"), "lab"), "src")
+                .select(F.explode("dsts").alias("dst"), "lab")
+                .select(F.expr(_EDGE_CODE).alias("code"))
                 .groupBy("code")
                 .agg(F.count(F.lit(1)).alias("c"))
                 .select(
-                    F.shiftrightunsigned("code", 32).alias("node"),
-                    F.col("code").bitwiseAND(F.lit((1 << 32) - 1)).alias("lab"),
-                    "c",
+                    F.expr(_EDGE_NODE).alias("node"), F.expr(_EDGE_LABEL).alias("lab"), "c"
                 )
             )
-        else:
-            nbr = edge_labels.groupBy(F.col("dst").alias("node"), "lab").agg(
-                F.count(F.lit(1)).alias("c")
-            )
-        # mode-with-min-tiebreak as ONE hash aggregate: max of (count, -lab)
-        # orders by count desc then lab asc — replaces the per-node
-        # row_number window (a sort shuffle) with a partial-aggregable max
-        pick = nbr.groupBy("node").agg(
-            F.max(F.struct(F.col("c"), (-F.col("lab")).alias("nl"))).alias("m")
-        ).select("node", (-F.col("m.nl")).alias("new_lab"))
-        # truncate per round: the label relation is round-N-deep otherwise
-        # (see iter_checkpoint — Catalyst re-optimizes the nested tree per
-        # action and the final window pays for all three rounds at once)
-        joined = labels.join(pick, "node", "left").select(
-            "node", F.coalesce("new_lab", "lab").alias("lab")
+        # c is at most a closed neighborhood's size — one parity class of
+        # [0, 2^31) plus the node itself — so c < 2^31 as _PICK_CODE needs
+        new_labels = (
+            counted.groupBy("node")
+            .agg(F.max(F.expr(_PICK_CODE)).alias("m"))
+            .select("node", F.expr(_PICK_LABEL).alias("lab"))
         )
-        _round_plan("label_communities", rnd, joined)
-        labels = iter_checkpoint(joined)
+        _round_plan("label_communities", rnd, new_labels)
+        # truncate per round: the label relation is round-N-deep otherwise
+        # (see iter_checkpoint)
+        labels = iter_checkpoint(new_labels)
     # community_size via groupBy-count + join, not a window partitioned on
     # the label: LPA routinely produces one giant community, and a window
     # would funnel that whole component through a single task (hot key);
@@ -835,8 +780,6 @@ def label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = labels.join(sizes, "lab").select(
         "node", F.col("lab").alias("community"), "community_size"
     )
-    from gmall_spark.session import unpersist_with
-
     return unpersist_with(out, adj)
 
 
@@ -893,20 +836,12 @@ FROM bfs GROUP BY 1
 def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_spark.session import iter_checkpoint
 
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c_node"),
-            (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-        )
-        .distinct()
+    adj = (
+        _trade_edges(spark, sf_dir)
+        .groupBy("src")
+        .agg(F.collect_set("dst").alias("dsts"))
+        .persist()
     )
-    sym = pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst")).unionByName(
-        pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
-    )
-    adj = sym.groupBy("src").agg(F.collect_list("dst").alias("dsts")).persist()
     seed = spark.range(1).select(
         F.lit(_BFS_SRC).cast("long").alias("node"), F.lit(0).cast("long").alias("dist")
     )

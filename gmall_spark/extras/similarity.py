@@ -948,15 +948,21 @@ def pq_train_books(
     # filter, which row-group min/max skipping turns into a pinpoint read
     # (guide §6: make pruning and pushdown do the work). Seeds are
     # bit-identical for unique ids (the table contract; with duplicate ids
-    # the old take was already tie-ambiguous).
-    seed_ids = [r[0] for r in base.select(id_col).orderBy(id_col).limit(k).collect()]
+    # the old take was already tie-ambiguous). Null ids are skipped: orderBy
+    # sorts them first, and isin() never matches a null.
+    seed_ids = [
+        r[0]
+        for r in base.select(id_col).where(F.col(id_col).isNotNull())
+        .orderBy(id_col).limit(k).collect()
+    ]
     if not seed_ids:
         return None
     seed_pdf = (
         base.where(F.col(id_col).isin(seed_ids)).orderBy(id_col).limit(k).toPandas()
     )
-    if not len(seed_pdf):
-        return None
+    assert len(seed_pdf) == len(seed_ids), (
+        f"PQ seed fetch returned {len(seed_pdf)} rows for {len(seed_ids)} ids"
+    )
     seed_full = np.stack(seed_pdf[vec_col].to_numpy()).astype("float64")
     books = [
         seed_full[:, s * sub_dim : (s + 1) * sub_dim].copy() for s in range(m)

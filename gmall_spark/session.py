@@ -69,8 +69,9 @@ SCALE_CONFS = {
     # node-sized label/rank table per round (guide §8: move the lightweight
     # proxy, never the edge payload) — at sf100 that is ~16M rows / ~400 MB
     # serialized, over the default. 4g bounds a runaway collect while giving
-    # the node-table broadcasts headroom; the kernels fall back to the
-    # shuffle path past SPARK_GRAFT_GRAPH_BCAST_NODES anyway.
+    # the node-table broadcasts headroom; extras/graph.py::_fits_broadcast
+    # sizes the broadcast from this value and switches the kernels to the
+    # shuffle path when the node table would not fit.
     "spark.driver.maxResultSize": "4g",
     # One BLAS thread per Python worker: every core already runs a task, so
     # an unpinned OpenBLAS/MKL may spawn n_cores threads PER worker and

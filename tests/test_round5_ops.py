@@ -1,11 +1,10 @@
 """Round-5 entry semantics: sketch edge cases (KMV exact-below-k, HLL
 register mergeability and in-range accuracy), importance-resampling target
-affinity, winsorization cut-element selection, and LPA community separation
-on a known topology.
+affinity and winsorization cut-element selection.
 
 The oracle-parity suite value-hash-compares these entries on the real
 testdata; these tests pin behaviors the testdata may never exercise (tiny
-cardinalities, disconnected graphs, adversarial outliers)."""
+cardinalities, adversarial outliers)."""
 
 from __future__ import annotations
 
@@ -15,7 +14,6 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-import gmall_spark.extras.graph  # noqa: F401  (registers label_communities)
 import gmall_spark.extras.queries  # noqa: F401  (registers the extras entries)
 import gmall_spark.streaming.queries  # noqa: F401  (registers streaming entries)
 from gmall_spark.queries import QUERIES
@@ -109,30 +107,6 @@ def test_winsorize_picks_exact_elements_and_clips_outliers(spark, tmp_path):
     assert row["p01"] == 1.0 and row["p99"] == 99.0
     assert row["clipped_ct"] == 1  # only 100.0 falls outside [1, 99]
     assert abs(row["winsorized_sum"] - (sum(range(1, 100)) + 99)) < 1e-9
-
-
-def test_label_communities_separates_disconnected_blocks(spark, tmp_path):
-    """Two disconnected bipartite blocks (customers 1-3 ↔ suppliers 1-2 and
-    customers 11-13 ↔ suppliers 11-12) must resolve to two communities."""
-    orders = pd.DataFrame(
-        [(k, c) for k, c in [(1, 1), (2, 2), (3, 3), (11, 11), (12, 12), (13, 13)]],
-        columns=["o_orderkey", "o_custkey"],
-    )
-    line = pd.DataFrame(
-        [
-            (1, 1), (1, 2), (2, 1), (2, 2), (3, 1),
-            (11, 11), (11, 12), (12, 11), (12, 12), (13, 11),
-        ],
-        columns=["l_orderkey", "l_suppkey"],
-    )
-    orders.to_parquet(tmp_path / "orders.parquet", index=False)
-    line.to_parquet(tmp_path / "lineitem.parquet", index=False)
-    out = QUERIES["label_communities"](spark, str(tmp_path)).collect()
-    comm = {r["node"]: r["community"] for r in out}
-    block_a = {comm[n] for n in (2, 4, 6, 3, 5)}  # cust 1-3 ×2, supp 1-2 ×2+1
-    block_b = {comm[n] for n in (22, 24, 26, 23, 25)}
-    assert len(block_a) == 1 and len(block_b) == 1
-    assert block_a != block_b
 
 
 def test_streaming_decontaminate_matches_batch_gate(spark, tmp_path):

@@ -368,47 +368,3 @@ def test_bucketed_cojoin_sweeps_dead_pid_orphans(spark):
 
         shutil.rmtree(live, ignore_errors=True)
         shutil.rmtree(dead, ignore_errors=True)
-
-
-def test_sssp_weighted_matches_python_bellman_ford(spark):
-    """Distances from the frontier Bellman-Ford entry must equal a plain
-    single-machine Bellman-Ford limited to the same round budget, and the
-    reachable set must equal bfs_hops' (same seed, same hop bound)."""
-    from gmall_spark.extras.graph import _SSSP_HOPS, _SSSP_SRC
-
-    got = {r["node"]: r["dist"] for r in QUERIES["sssp_weighted"](spark, SF).collect()}
-
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    l = spark.read.parquet(f"{SF}/lineitem.parquet")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.min(F.col("l_quantity").cast("long") % 7 + 1).alias("w"))
-        .collect()
-    )
-    adj: dict[int, list[tuple[int, int]]] = {}
-    for r in pairs:
-        adj.setdefault(r["c"], []).append((r["s"], r["w"]))
-        adj.setdefault(r["s"], []).append((r["c"], r["w"]))
-
-    dist = {_SSSP_SRC: 0}
-    frontier = {_SSSP_SRC: 0}
-    for _ in range(_SSSP_HOPS):
-        nxt: dict[int, int] = {}
-        for u, du in frontier.items():
-            for v, w in adj.get(u, []):
-                cand = du + w
-                if cand < dist.get(v, 1 << 60) and cand < nxt.get(v, 1 << 60):
-                    nxt[v] = cand
-        frontier = {v: d for v, d in nxt.items() if d < dist.get(v, 1 << 60)}
-        dist.update(frontier)
-
-    assert got == dist
-
-    bfs = {r["node"] for r in QUERIES["bfs_hops"](spark, SF).collect()}
-    assert set(got) == bfs  # reachability within the hop bound is weight-blind
-    assert got[_SSSP_SRC] == 0
-    assert all(d >= 1 for n, d in got.items() if n != _SSSP_SRC)

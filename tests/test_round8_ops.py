@@ -237,6 +237,23 @@ def test_pq_encode_accepts_pretrained_books(spark):
     assert a == b
 
 
+def test_pq_seed_fetch_skips_null_ids(spark):
+    """A null id sorts first; the seeds must still be the k lowest non-null
+    ids' vectors — k of them, not k-1 (isin never matches the null)."""
+    from gmall_spark.extras import similarity
+
+    rows = [(None, [9.0, 9.0, 9.0, 9.0])] + [
+        (i, [float(i), float(-i), float(10 * i), 0.5]) for i in range(1, 7)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    books = similarity.pq_train_books(
+        df, "vec_id", "embedding", m=2, k=4, iters=0, sub_dim=2
+    )
+    seeds = np.asarray([rows[i][1] for i in range(1, 5)])
+    assert np.array_equal(books[0], seeds[:, :2])
+    assert np.array_equal(books[1], seeds[:, 2:])
+
+
 # ---------------------------------------------------------------------------
 # topology: event-driven quiescence listener (replaces the 6-poll drain tail)
 # ---------------------------------------------------------------------------

@@ -1,18 +1,9 @@
-"""Round-9 unit tests: the bench last-line budget, the graph kernels'
-gather (broadcast-votes) regime vs the scatter (shuffle) fallback, and the
-per-round plan hook.
-
-The gather/scatter equivalence tests run on a real SparkSession at sf0.001
-because the claim under test is bit-identity of the two DISTRIBUTED
-execution paths, not numpy arithmetic."""
+"""Round-9 unit tests: the bench last-line budget (graph-kernel tests live in
+tests/test_graph.py)."""
 
 from __future__ import annotations
 
 import json
-
-import pytest
-
-SF = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
@@ -48,50 +39,3 @@ def test_summary_line_prioritizes_declared_then_worst():
     assert all(n in d["queries"] for n in declared if n in timings)
     assert "zz_huge_entry" in d["queries"]
     assert len(line) <= bench._LAST_LINE_BUDGET
-
-
-# ---------------------------------------------------------------------------
-# graph kernels: gather (broadcast-votes) vs scatter (shuffle) bit-identity.
-# SPARK_GRAFT_GRAPH_BCAST_NODES=0 forces the fallback, so both distributed
-# paths run on the same corpus and must agree row-for-row.
-# ---------------------------------------------------------------------------
-@pytest.mark.parametrize("entry", ["label_communities", "pagerank_trade"])
-def test_gather_and_scatter_paths_bit_identical(spark, entry, monkeypatch):
-    import gmall_spark.extras.graph  # noqa: F401 — registers entries
-    from gmall_spark.queries import QUERIES
-
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BCAST_NODES", raising=False)
-    spark.catalog.clearCache()
-    new = sorted(tuple(r) for r in QUERIES[entry](spark, SF).collect())
-
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST_NODES", "0")
-    spark.catalog.clearCache()
-    old = sorted(tuple(r) for r in QUERIES[entry](spark, SF).collect())
-
-    assert len(new) > 0
-    assert new == old
-
-
-def test_round_plan_hook_sees_prestcheckpoint_rounds(spark, monkeypatch):
-    import gmall_spark.extras.graph as g
-    from gmall_spark.queries import QUERIES
-
-    seen: list[tuple[str, int]] = []
-    monkeypatch.setattr(
-        g, "ROUND_PLAN_HOOK", lambda kernel, rnd, df: seen.append((kernel, rnd))
-    )
-    spark.catalog.clearCache()
-    QUERIES["label_communities"](spark, SF).count()
-    kernels = {k for k, _ in seen}
-    rounds = sorted(r for k, r in seen if k == "label_communities")
-    assert kernels == {"label_communities"}
-    assert rounds == [1, 2, 3]  # _LPA_ROUNDS pre-checkpoint frames, in order
-
-
-def test_graph_bcast_max_nodes_env_override(monkeypatch):
-    import gmall_spark.extras.graph as g
-
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BCAST_NODES", raising=False)
-    assert g._graph_bcast_max_nodes() == g._GRAPH_BCAST_MAX_NODES
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST_NODES", "12345")
-    assert g._graph_bcast_max_nodes() == 12345

@@ -229,52 +229,6 @@ def test_asof_join_single_shuffle(spark):
     assert tree.count("Exchange hashpartitioning") == 1, tree
 
 
-def test_pagerank_two_node_cycle_fixed_point(spark):
-    """A 2-cycle is PageRank's fixed point: each node keeps rank 1.0 —
-    150000 + 850·1000000 div 1000 = 1000000 exactly in micro-units."""
-    from gmall_spark.extras.graph import pagerank
-
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(edges, "src", "dst", rounds=7).collect()}
-    assert got == {1: 1_000_000, 2: 1_000_000}
-
-
-def test_pagerank_star_sink_accumulates(spark):
-    """Symmetrized star (hub 0 ↔ leaves 1..4): hub rank must exceed leaf
-    rank, leaves stay symmetric, and total mass stays within integer-
-    truncation loss of n·1e6."""
-    from gmall_spark.extras.graph import pagerank
-
-    pairs = [(0, i) for i in range(1, 5)]
-    edges = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src long, dst long"
-    )
-    got = {r["node"]: r["rank"] for r in pagerank(edges, "src", "dst", rounds=5).collect()}
-    assert got[0] > got[1]
-    assert len({got[i] for i in range(1, 5)}) == 1  # leaves identical
-    total = sum(got.values())
-    assert 5 * 1_000_000 - 100 <= total <= 5 * 1_000_000
-
-
-def test_pagerank_chunked_adjacency_bit_identical(spark):
-    """The opt-in celebrity-node build (adj_chunk) must produce the same
-    ranks as the default single-array adjacency, exercised with a chunk
-    size SMALLER than the hub's degree so real splitting happens."""
-    from gmall_spark.extras.graph import pagerank
-
-    pairs = [(0, i) for i in range(1, 12)] + [(1, 2), (3, 4), (5, 6)]
-    edges = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src long, dst long"
-    )
-    plain = {r["node"]: r["rank"] for r in pagerank(edges, "src", "dst", rounds=4).collect()}
-    chunked = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, "src", "dst", rounds=4, adj_chunk=3).collect()
-    }
-    assert plain == chunked
-    assert len(plain) == 12
-
-
 def test_range_join_matches_naive_and_handles_overlap(spark):
     from pyspark.sql import functions as F
 
