@@ -537,8 +537,12 @@ _KCORE_ROUNDS = 4
 
 
 def _kcore_oracle() -> str:
+    # every CTE is MATERIALIZED: each edges{r+1} reads edges{r} twice, and
+    # DuckDB inlines a CTE at every reference, so the inlined 4-round chain
+    # repeats the lineitem self-join until it runs out of memory (over 10 GB
+    # at sf0.01); materialized, sf0.1 evaluates in well under a second
     ctes = [
-        """edges0 AS (
+        """edges0 AS MATERIALIZED (
   SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
   FROM lineitem a
   JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
@@ -549,13 +553,13 @@ def _kcore_oracle() -> str:
     ]
     for r in range(_KCORE_ROUNDS):
         ctes.append(
-            f"""deg{r} AS (
+            f"""deg{r} AS MATERIALIZED (
   SELECT node, count(*) AS d FROM (
     SELECT a AS node FROM edges{r} UNION ALL SELECT b AS node FROM edges{r}
   ) GROUP BY 1
 ),
-keep{r} AS (SELECT node FROM deg{r} WHERE d >= {_KCORE_K}),
-edges{r + 1} AS (
+keep{r} AS MATERIALIZED (SELECT node FROM deg{r} WHERE d >= {_KCORE_K}),
+edges{r + 1} AS MATERIALIZED (
   SELECT e.a, e.b FROM edges{r} e
   JOIN keep{r} ka ON e.a = ka.node
   JOIN keep{r} kb ON e.b = kb.node

@@ -36,6 +36,7 @@ from gmall_spark.operators.routing import route_by_config
 from gmall_spark.operators.stateful import dedup_daily, detect_bounce, first_touch
 from gmall_spark.operators.windows import tumbling_stats
 from gmall_spark.schemas import TABLE_PROCESS_SCHEMA
+from gmall_spark.session import conf_scope
 from gmall_spark.session import scratch_dir as _scratch
 from gmall_spark.session import spool_dir as _spool_dir
 from gmall_spark.sources import load_table
@@ -3924,8 +3925,6 @@ def seasonal_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def backfill_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     base = _spool_dir("backfill_") + "/events_by_dt"
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("dt"),
@@ -3945,16 +3944,12 @@ def backfill_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     repaired = ev.join(F.broadcast(busiest.select("dt")), "dt").withColumn(
         "cents", F.col("cents") + 1
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         # overwrite mode + dynamic: ONLY the dt partitions present in
         # `repaired` (exactly one) are replaced
         repaired.select("dt", "event_id", "cents").write.mode("overwrite").partitionBy(
             "dt"
         ).parquet(base)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(base)
     return (
         back.groupBy("dt")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -257,25 +258,24 @@ def _gc_scratch_spool(spool_root: str) -> None:
             pass
 
 
+def _cpus() -> int:
+    """Local core count: SPARK_GRAFT_CPUS, default 32 (see get_spark)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def stream_shuffle_width() -> int:
     """Shuffle/state-store width for KEYED-PANDAS-STATE streaming queries
-    (applyInPandasWithState / transformWithStateInPandas). Their per-batch
-    cost is the parallel Python work, so width should track cores: measured
-    solo on this 32-core box, 32 beats 8 on every pandas-state entry
-    (daily-UV dedup 6.1s → 2.0s). Unlike the JVM-state family this width
-    stays STATIC under input growth — the sf10 A/B
+    (applyInPandasWithState / transformWithStateInPandas): the session's
+    core count. Their per-batch cost is the parallel Python work, so width
+    should track cores: measured solo on a 32-core box, 32 beats 8 on every
+    pandas-state entry (daily-UV dedup 6.1s → 2.0s). Unlike the JVM-state
+    family this width stays STATIC under input growth — the sf10 A/B
     (BENCH_r06_sf10_streaming.json) measured the 32/64/96 curve flat within
     noise on a quiet box (378/408/382s over the 4 heaviest entries) and 16
     materially worse in both passes (≥1.4× the worst 32-run): Python work
     saturates at physical cores, and partitions beyond that only add state
-    store open+commit overhead without adding parallelism. Env-tunable
-    (SPARK_GRAFT_STREAM_SHUFFLE) so a contended host can trade parallelism
-    for fixed per-partition machinery without a code change."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-    )
+    store open+commit overhead without adding parallelism."""
+    return _cpus()
 
 
 #: auto-width floor — the bench-corpus optimum; see stream_jvm_state_width
@@ -313,12 +313,8 @@ def stream_jvm_state_width(input_bytes: int | None = None) -> int:
     220 MB/trigger — per-partition work dominates there, inverting the
     sf0.1 result — so the ramp toward cores is required, not merely safe.
     Production sizes this to buffered state volume like any shuffle
-    width — billions of buffered rows want hundreds of partitions; raise
-    the cap via SPARK_GRAFT_STREAM_SHUFFLE there.
-    SPARK_GRAFT_STREAM_JVM_SHUFFLE overrides everything."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_JVM_SHUFFLE")
-    if env is not None:
-        return int(env)
+    width — billions of buffered rows want hundreds of partitions, which
+    the cores-tracking cap grants on a cluster-sized SPARK_GRAFT_CPUS."""
     if not input_bytes:
         return _JVM_STATE_MIN_WIDTH
     return max(
@@ -335,7 +331,7 @@ def get_spark(app_name: str = "gmall_spark", master: str | None = None) -> Spark
       SPARK_GRAFT_SHUFFLE_PARTITIONS — shuffle width (default = cpus)
       SPARK_GRAFT_SCRATCH — ephemeral-IO root (default /dev/shm, see scratch_dir)
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
     # executorEnv only reaches executors on a real cluster; in local mode the
     # Python workers inherit THIS process's env, so export the BLAS pinning
@@ -375,7 +371,7 @@ def get_spark(app_name: str = "gmall_spark", master: str | None = None) -> Spark
     return spark
 
 
-_ROCKSDB_PROVIDER = (
+ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
@@ -396,10 +392,29 @@ def enable_rocksdb_state(spark: SparkSession, enabled: bool = True) -> None:
     per-operator."""
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
-        _ROCKSDB_PROVIDER
+        ROCKSDB_PROVIDER
         if enabled
         else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
     )
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict):
+    """Pin session confs for one block. On exit — normal or raised — each
+    key gets back its previous value, or is unset if it had none, so the
+    session default applies again. Streaming queries capture the session
+    conf at start(), so a scope around start() pins that query's conf."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # Bounded FIFO of persisted-intermediate groups ("scopes") registered by

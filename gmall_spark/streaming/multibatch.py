@@ -36,6 +36,7 @@ corpus and beyond.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +70,7 @@ def chunk_events(
     strictly increasing mtimes (the file source's ordering key) and return
     the directory. Idempotent per (sf_dir, n_batches, late_every); atomic
     rename so a crashed writer never leaves a half-directory behind."""
-    from gmall_spark.session import scratch_dir
+    from gmall_spark.session import conf_scope, scratch_dir
     from gmall_spark.sources import load_table
 
     tag = f"b{n_batches}_l{late_every or 0}"
@@ -123,52 +124,40 @@ def chunk_events(
 
     tmp = d + "__writing"
     if os.path.isdir(tmp):
-        import shutil
-
         shutil.rmtree(tmp)
     os.makedirs(tmp)
     # µs on disk: the stream schema declares `ts timestamp` (µs) — pin the
-    # writer so no ns/µs drift can reappear (set/restore around the writes)
-    ts_conf = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_conf, None)
-    spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
+    # writer so no ns/µs drift can reappear
     base = 1_600_000_000  # fixed epoch; only the ORDER of mtimes matters
     try:
-        for b in range(n_batches):
-            out_b = os.path.join(tmp, f"_spark_chunk{b}")
-            # one file per chunk (1 file == 1 micro-batch for every
-            # maxFilesPerTrigger=1 consumer): repartition — NOT coalesce,
-            # which would collapse the rank stage itself to one task —
-            # shuffles the chunk to a single write task executor-side;
-            # row ORDER within the file is irrelevant, consumers sort
-            (
-                chunked.filter(F.col("arrival") == b)
-                .drop("arrival")
-                .repartition(1)
-                .write.parquet(out_b)
-            )
-            part = next(
-                f for f in os.listdir(out_b)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            path = os.path.join(tmp, f"chunk{b}.parquet")
-            os.rename(os.path.join(out_b, part), path)
-            import shutil
-
-            shutil.rmtree(out_b, ignore_errors=True)
-            os.utime(path, (base + b * 10, base + b * 10))
+        with conf_scope(spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}):
+            for b in range(n_batches):
+                out_b = os.path.join(tmp, f"_spark_chunk{b}")
+                # one file per chunk (1 file == 1 micro-batch for every
+                # maxFilesPerTrigger=1 consumer): repartition — NOT coalesce,
+                # which would collapse the rank stage itself to one task —
+                # shuffles the chunk to a single write task executor-side;
+                # row ORDER within the file is irrelevant, consumers sort
+                (
+                    chunked.filter(F.col("arrival") == b)
+                    .drop("arrival")
+                    .repartition(1)
+                    .write.parquet(out_b)
+                )
+                part = next(
+                    f for f in os.listdir(out_b)
+                    if f.startswith("part-") and f.endswith(".parquet")
+                )
+                path = os.path.join(tmp, f"chunk{b}.parquet")
+                os.rename(os.path.join(out_b, part), path)
+                shutil.rmtree(out_b, ignore_errors=True)
+                os.utime(path, (base + b * 10, base + b * 10))
     finally:
-        if prev_ts is None:
-            spark.conf.unset(ts_conf)
-        else:
-            spark.conf.set(ts_conf, prev_ts)
         rp.unpersist()
     os.makedirs(os.path.dirname(d), exist_ok=True)
     try:
         os.rename(tmp, d)
     except OSError:  # concurrent creator won the rename — use theirs
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     return d
 
@@ -209,9 +198,7 @@ def run_collect_batches(
     row materialization, so the capture scales with the cluster exactly
     like any other sink (an earlier pandas-collect version hauled the full
     output through the driver twice)."""
-    import tempfile
-
-    from gmall_spark.session import spool_dir, stream_jvm_state_width
+    from gmall_spark.session import conf_scope, spool_dir, stream_jvm_state_width
     from gmall_spark.streaming.pipelines import _stream_input_bytes
 
     spark = df.sparkSession
@@ -226,12 +213,8 @@ def run_collect_batches(
             .parquet(spool)
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))),
-    )
-    try:
+    width = shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
             df.writeStream.foreachBatch(sink)
             .outputMode(output_mode)
@@ -239,8 +222,6 @@ def run_collect_batches(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         # explicit schema: an all-empty spool (or a batch with only nulls)
         # must not change inferred types between runs

@@ -230,7 +230,12 @@ def warm_streaming(spark: SparkSession) -> None:
     import os
     import time
 
-    from gmall_spark.session import scratch_dir, stream_shuffle_width
+    from gmall_spark.session import (
+        ROCKSDB_PROVIDER,
+        conf_scope,
+        scratch_dir,
+        stream_shuffle_width,
+    )
     from gmall_spark.streaming.stateful import fix_is_new_stream
 
     src_dir = scratch_dir("warm_src")
@@ -243,9 +248,7 @@ def warm_streaming(spark: SparkSession) -> None:
     src = spark.readStream.schema("event_id long, ts timestamp, user_id long").parquet(
         src_dir
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_width()))
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": stream_shuffle_width()}):
         name = f"warm_stream_{time.time_ns()}"
         q = (
             fix_is_new_stream(src)
@@ -287,7 +290,6 @@ def warm_streaming(spark: SparkSession) -> None:
         # 1.5s warm — the r4 'unreproducible baseline row' was this gap).
         # Must be a STREAMING write: warming the batch writer pool alone
         # measurably did not pre-pay it.
-        from gmall_spark.session import scratch_dir
         from gmall_spark.sinks.manifest_sink import register_manifest_sink
 
         register_manifest_sink(spark)
@@ -322,10 +324,9 @@ def warm_streaming(spark: SparkSession) -> None:
 
             from gmall_spark.streaming.stateful import fix_is_new_tws
 
-            prev_provider = spark.conf.get(
-                "spark.sql.streaming.stateStore.providerClass", None
-            )
-            try:
+            with conf_scope(
+                spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+            ):
                 w = spark.readStream.schema(
                     "event_id long, ts timestamp, user_id long"
                 ).parquet(src_dir)
@@ -340,20 +341,8 @@ def warm_streaming(spark: SparkSession) -> None:
                 )
                 q.awaitTermination()
                 spark.catalog.dropTempView(tname)
-            finally:
-                if prev_provider is None:
-                    spark.conf.unset(
-                        "spark.sql.streaming.stateStore.providerClass"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass",
-                        prev_provider,
-                    )
         except ImportError:
             pass
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _stream_input_bytes(df: DataFrame) -> int:
@@ -414,62 +403,53 @@ def run_to_memory(
     """
     import os as _os
 
-    from gmall_spark.session import spool_dir, stream_jvm_state_width
+    from gmall_spark.session import conf_scope, spool_dir, stream_jvm_state_width
 
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))),
-    )
+    width = shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))
     if output_mode == "append":
-        schema = df.schema
         spool = spool_dir(f"filesink_{name}_")
         out_path = _os.path.join(spool, "out")
-        try:
-            q = (
-                df.writeStream.format("parquet")
-                .queryName(name)
-                .option("path", out_path)
-                .option("checkpointLocation", _os.path.join(spool, "ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # a zero-row stream commits no files; explicit schema + exist_ok
-        # mkdir keep the read lazy and empty-safe. The read sees the sink's
-        # _spark_metadata commit log, so only committed files are visible
-        # (partial task output from a failed attempt is never read).
-        _os.makedirs(out_path, exist_ok=True)
-        return spark.read.schema(schema).parquet(out_path)
-    try:
+        writer = (
+            df.writeStream.format("parquet")
+            .option("path", out_path)
+            .option("checkpointLocation", _os.path.join(spool, "ckpt"))
+        )
+    else:
+        writer = df.writeStream.format("memory")
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
-            df.writeStream.format("memory")
-            .queryName(name)
+            writer.queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # Spool the sink to parquet and DROP the memory table: a memory sink
-    # pins its full result in the JVM for the session's lifetime, and a
-    # bench/driver run executes dozens of streaming entries back-to-back —
-    # the accumulated row buffers were measurably degrading every
-    # subsequent query (GC pressure). The returned frame reads the spool
-    # with the sink's exact schema (explicit, so an empty result survives
-    # the round-trip). RAM-backed scratch: the spool is written and read
-    # once, immediately — exactly the IO worth keeping off a shared disk.
+    if output_mode == "append":
+        # a zero-row stream commits no files; explicit schema + exist_ok
+        # mkdir keep the read lazy and empty-safe. The read sees the sink's
+        # _spark_metadata commit log, so only committed files are visible
+        # (partial task output from a failed attempt is never read).
+        _os.makedirs(out_path, exist_ok=True)
+        return spark.read.schema(df.schema).parquet(out_path)
+    return spool_memory_sink(spark, name, spool_dir(f"memsink_{name}_"))
+
+
+def spool_memory_sink(spark: SparkSession, name: str, path: str) -> DataFrame:
+    """Spool memory sink ``name`` to parquet at ``path``, DROP the memory
+    table, and return a frame over the spool. A memory sink pins its full
+    result in the JVM for the session's lifetime, and a registry sweep
+    executes dozens of streaming entries back-to-back — the accumulated row
+    buffers were measurably degrading every subsequent query (GC pressure).
+    The returned frame reads the spool with the sink's exact schema
+    (explicit, so an empty result survives the round-trip). RAM-backed
+    scratch: the spool is written and read once, immediately — exactly the
+    IO worth keeping off a shared disk."""
     tbl = spark.table(name)
     schema = tbl.schema
-    spool = spool_dir(f"memsink_{name}_")
-    tbl.write.mode("overwrite").parquet(spool)
+    tbl.write.mode("overwrite").parquet(path)
     spark.catalog.dropTempView(name)
-    return spark.read.schema(schema).parquet(spool)
+    return spark.read.schema(schema).parquet(path)
 
 
 def jdbc_epoch_write(batch: DataFrame, epoch_id: int, url: str, table: str, **jdbc_opts) -> None:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_spark.queries import TS_FMT, register
-from gmall_spark.session import stream_shuffle_width
+from gmall_spark.session import ROCKSDB_PROVIDER, conf_scope, stream_shuffle_width
 from gmall_spark.streaming.pipelines import (
     interval_join_stream,
     run_to_memory,
@@ -1394,18 +1394,12 @@ def streaming_tws_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries should keep the session default."""
     from gmall_spark.streaming.stateful import fix_is_new_tws
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         return run_to_memory(
             fix_is_new_tws(stream_events(spark, sf_dir)),
             _name("s_tws_isnew"),
             shuffle_partitions=stream_shuffle_width(),
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 @register("streaming_tws_bounce", _BOUNCE_ORACLE)
@@ -1420,24 +1414,18 @@ def streaming_tws_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted + expired + live) and state-eviction accounting."""
     from gmall_spark.streaming.stateful import detect_bounce_tws
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         out = run_to_memory(
             detect_bounce_tws(stream_events(spark, sf_dir)),
             _name("s_tws_bounce"),
             shuffle_partitions=stream_shuffle_width(),
         )
-        return out.select(
-            "event_id",
-            "user_id",
-            F.date_format("ts", TS_FMT).alias("ts"),
-            "bounce_reason",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    return out.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", TS_FMT).alias("ts"),
+        "bounce_reason",
+    )
 
 
 @register(

@@ -502,10 +502,9 @@ def _require_protobuf(fallback: str) -> None:
 def _tws_on_rocksdb(events: DataFrame) -> None:
     # transformWithState runs only on the RocksDB state store (its column-
     # family model); the default HDFS-backed store can't host it
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    from gmall_spark.session import enable_rocksdb_state
+
+    enable_rocksdb_state(events.sparkSession)
 
 
 def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:

@@ -25,31 +25,42 @@ per-stage watermark-closure semantics are proven by the dedicated streaming
 entries. At production scale the DWS layer would instead widen its watermark
 delay by the DWM timeout budget and run append.
 
-Quiescence: all sources exhausted AND every query idle (no input rows) for
-several consecutive polls — the window in which stage-2 timers flush (the
-engine runs one extra batch after a watermark advance) and their output
-drains through stage 3.
+Quiescence is event-driven: every query reports ``_IDLE_STREAK`` consecutive
+onQueryIdle events (a trigger fired and no batch ran) with no batch executed
+anywhere in the topology in between — the window in which stage-2 timers
+flush (the engine runs one extra batch after a watermark advance) and their
+output drains through stage 3 (see ``_drain``).
+
+``warehouse_topology`` builds the four queries once; the complete-mode entry,
+the append-mode entry and the crash/resume test differ only in the source
+directory, the DWS lateness budget and the DWS sink.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 import time
+from contextlib import contextmanager
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from gmall_spark.streaming.multibatch import stream_event_chunks
+from gmall_spark.functions import window_bounds
+from gmall_spark.session import (
+    conf_scope,
+    spool_dir,
+    stream_jvm_state_width,
+    stream_shuffle_width,
+)
+from gmall_spark.sources import load_table
+from gmall_spark.streaming.multibatch import chunk_events
+from gmall_spark.streaming.pipelines import spool_memory_sink
 from gmall_spark.streaming.stateful import dedup_daily_stream, detect_bounce_stream
 
-
-def _dir(base: str, name: str) -> str:
-    d = os.path.join(base, name)
-    os.makedirs(d, exist_ok=True)
-    return d
+PAGE_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
 
 #: consecutive onQueryIdle events required from EVERY query with zero
@@ -124,7 +135,7 @@ def _raise_if_terminated(watch: _QuiesceListener) -> None:
         )
 
 
-def _drain(queries, trigger_secs: float, timeout_secs: float, spark=None) -> None:
+def _drain(queries, trigger_secs: float, timeout_secs: float, spark: SparkSession) -> None:
     """Block until every query has been idle long enough that stage-2 timers
     have flushed (the engine runs one extra batch after a watermark advance)
     and their output has drained through stage 3.
@@ -144,22 +155,13 @@ def _drain(queries, trigger_secs: float, timeout_secs: float, spark=None) -> Non
     quiescence mid-commit — observed once as
     CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT aborting the final window flush).
 
-    Callers MUST lower spark.sql.streaming.noDataProgressEventInterval
-    (default 10 s) before starting the queries: onQueryIdle is throttled at
-    that cadence, so each drain stage otherwise stalls ~10 s per idle event
-    waiting for the signal, not for any real work (measured: a 1-file probe
-    query emits idle events every ~0.3 s at a 300 ms interval vs 10.0 s at
-    the default — tools/probe_idle_events.py)."""
+    The queries MUST start with spark.sql.streaming.noDataProgressEventInterval
+    lowered from its 10 s default (warehouse_topology pins 250 ms):
+    onQueryIdle is throttled at that cadence, so each drain stage otherwise
+    stalls ~10 s per idle event waiting for the signal, not for any real
+    work (measured in OPTIMIZATION_r08.md: a 1-file probe query emits idle
+    events every ~0.3 s at a 300 ms interval vs 10.0 s at the default)."""
     deadline = time.monotonic() + timeout_secs
-    # explicit session preferred: getActiveSession() can return None on a
-    # caller thread with no JVM-side active session, which would surface as
-    # an opaque AttributeError on .streams instead of a clear error
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            "_drain: no SparkSession — pass spark explicitly when driving the "
-            "topology from a thread without an active session"
-        )
     watch = _QuiesceListener({str(q.runId) for q in queries})
     spark.streams.addListener(watch)
     try:
@@ -194,168 +196,176 @@ def _drain(queries, trigger_secs: float, timeout_secs: float, spark=None) -> Non
         spark.streams.removeListener(watch)
 
 
+def _dir(base: str, name: str) -> str:
+    d = os.path.join(base, name)
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
+@contextmanager
+def warehouse_topology(
+    spark: SparkSession,
+    src: str,
+    base: str,
+    trigger_secs: float = 0.3,
+    lateness: tuple[int, datetime] | None = None,
+    dws_path: str | None = None,
+):
+    """Start the four queries over the event files in ``src``, each handoff
+    directory and checkpoint under ``base``, and yield them as
+    ``[q1, q2a, q2b, q3]``. Leaving the block stops every query — after an
+    error quietly, so the error is the one raised — and restores the
+    session confs.
+
+    ``lateness`` = (delay_secs, hi): the DWS aggregate marks a watermark of
+    ``delay_secs`` and keeps rows with ``ts <= hi`` (append mode, each window
+    emitted once on closure, see warehouse_e2e_append); None aggregates in
+    complete mode. ``dws_path`` sends the DWS output to a checkpointed
+    parquet sink (append mode only); None to the memory sink that
+    ``_dws_result(spark, base)`` reads back. The handoff directory names
+    and the memory sink are how perfbench/tracing.py attributes progress
+    to the ``stream.*`` layers."""
+    if dws_path is not None and lateness is None:
+        raise ValueError("the parquet DWS sink is append-only: pass lateness")
+    dwd_page = _dir(base, "dwd_page")
+    dwm_uv = _dir(base, "dwm_uv")
+    dwm_uj = _dir(base, "dwm_uj")
+    trig = {"processingTime": f"{trigger_secs} seconds"}
+
+    def page_stream() -> DataFrame:
+        return spark.readStream.schema(PAGE_SCHEMA).parquet(dwd_page)
+
+    def start_parquet(df: DataFrame, path: str, ck: str):
+        return (
+            df.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", _dir(base, ck))
+            .outputMode("append")
+            .trigger(**trig)
+            .start()
+        )
+
+    queries = []
+    # wide (cores-tracking) width for the DWD/DWM stages: chunked file
+    # passthrough + keyed-pandas state, both parallel-work-bound. Idle
+    # progress at trigger cadence so _drain sees quiescence when it happens,
+    # not at the 10 s default throttle. Both are captured per query at
+    # start(), so they are set before the first start()
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": stream_shuffle_width(),
+            "spark.sql.streaming.noDataProgressEventInterval": "250ms",
+        },
+    ):
+        try:
+            # q1 — DWD: chunked event source (one file per trigger), cleaned
+            # projection (BaseLogApp's parse/clean stage; our events are
+            # already structured, so cleaning = typed projection)
+            ev = (
+                spark.readStream.schema(PAGE_SCHEMA + ", props string")
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+            )
+            queries.append(
+                start_parquet(
+                    ev.select("event_id", "ts", "user_id", "event_type", "value"),
+                    dwd_page,
+                    "ck_q1",
+                )
+            )
+            # q2a — DWM unique visit (UniqueVisitApp): daily firsts off the
+            # live page log; q2b — DWM user jump (UserJumpDetailApp): CEP
+            # bounce with event-time timers off the SAME live page log. Both
+            # use the hash-bucket grouping: a bounded number of Python calls
+            # per batch at any volume, emitting exactly what the per-key
+            # grouping would (see streaming/stateful.py)
+            uv_rows = dedup_daily_stream(page_stream(), bucketed=True)
+            queries.append(start_parquet(uv_rows, dwm_uv, "ck_q2a"))
+            uj_rows = detect_bounce_stream(page_stream(), bucketed=True)
+            queries.append(start_parquet(uj_rows, dwm_uj, "ck_q2b"))
+
+            # q3 — DWS visitor stats (VisitorStatsApp): union the three live
+            # layers, count per 10-minute window per metric
+            pv = page_stream().select(F.lit("pv").alias("src"), "ts")
+            uv = (
+                spark.readStream.schema(
+                    "user_id long, dt string, first_event_id long, first_ts timestamp"
+                )
+                .parquet(dwm_uv)
+                .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
+            )
+            uj = (
+                spark.readStream.schema(
+                    "event_id long, user_id long, ts timestamp, bounce_reason string"
+                )
+                .parquet(dwm_uj)
+                .select(F.lit("uj").alias("src"), "ts")
+            )
+            union = pv.unionByName(uv).unionByName(uj)
+            if lateness is not None:
+                delay_secs, hi = lateness
+                # watermark FIRST (sentinel ts must drive it), filter second
+                union = union.withWatermark("ts", f"{delay_secs} seconds").filter(
+                    F.col("ts") <= F.lit(hi)
+                )
+            stats = union.groupBy(F.window("ts", "10 minutes").alias("w")).agg(
+                *(
+                    F.sum(F.when(F.col("src") == s, 1).otherwise(0)).cast("long").alias(f"{s}_ct")
+                    for s in ("pv", "uv", "uj")
+                )
+            )
+            # the pandas-state layers above run wide (parallel Python work),
+            # while this JVM window agg takes the narrow JVM-state width — in
+            # complete mode it re-commits every window's store each trigger,
+            # so per-partition store machinery dominates (see
+            # session.stream_jvm_state_width)
+            spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
+            if dws_path is None:
+                queries.append(
+                    stats.writeStream.format("memory")
+                    .queryName(os.path.basename(base))
+                    .outputMode("complete" if lateness is None else "append")
+                    .trigger(**trig)
+                    .start()
+                )
+            else:
+                queries.append(start_parquet(stats, dws_path, "ck_q3"))
+            yield queries
+        except BaseException:
+            for q in queries:  # error path — don't leak running queries
+                try:
+                    q.stop()
+                except Exception:
+                    pass
+            raise
+        for q in queries:
+            q.stop()
+
+
+def _dws_result(spark: SparkSession, base: str) -> DataFrame:
+    """The memory-sink DWS output of the topology under ``base``, spooled
+    (so it does not pin JVM heap for the rest of the session) and projected
+    to the entries' window-string contract."""
+    out = spool_memory_sink(spark, os.path.basename(base), os.path.join(base, "dws_out"))
+    stt, edt = window_bounds(F.col("w"))
+    return out.select(stt.alias("stt"), edt.alias("edt"), "pv_ct", "uv_ct", "uj_ct")
+
+
 def warehouse_e2e(
     spark: SparkSession,
     sf_dir: str,
     trigger_secs: float = 0.3,
     timeout_secs: float = 600.0,
 ) -> DataFrame:
-    """Run the four-query topology to quiescence; returns the DWS result:
-    one row per 10-minute window with pv_ct / uv_ct / uj_ct."""
-    from gmall_spark.session import spool_dir
-
+    """Run the four-query topology over the shared chunk files to
+    quiescence; returns the DWS result: one row per 10-minute window with
+    pv_ct / uv_ct / uj_ct."""
     base = spool_dir("e2e_")
-    dwd_page = _dir(base, "dwd_page")
-    dwm_uv = _dir(base, "dwm_uv")
-    dwm_uj = _dir(base, "dwm_uj")
-    sink_name = f"e2e_{os.path.basename(base)}"
-    trig = {"processingTime": f"{trigger_secs} seconds"}
-
-    from gmall_spark.session import stream_shuffle_width
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    # wide (cores-tracking) width for the DWD/DWM stages: chunked file
-    # passthrough + keyed-pandas state, both parallel-work-bound; the DWS
-    # window agg below re-pins to the narrow JVM-state width at its start
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_width()))
-    # surface idle progress at trigger cadence so _drain sees quiescence when
-    # it happens, not at the 10 s default throttle (see _drain docstring);
-    # captured per-query at start(), so set before the first start()
-    prev_idle = spark.conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", None
-    )
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
-    queries = []
-    try:
-        # q1 — DWD: chunked event source (one file per trigger), cleaned
-        # projection (BaseLogApp's parse/clean stage; our events are already
-        # structured, so cleaning = typed projection)
-        ev = stream_event_chunks(spark, sf_dir, 3)
-        q1 = (
-            ev.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", dwd_page)
-            .option("checkpointLocation", _dir(base, "ck_q1"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q1)
-
-        page_schema = (
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-
-        def page_stream() -> DataFrame:
-            return spark.readStream.schema(page_schema).parquet(dwd_page)
-
-        # q2a — DWM unique visit (UniqueVisitApp): daily firsts off the live
-        # page log. Both DWM layers use the hash-bucket grouping: a bounded
-        # number of Python calls per batch at any volume, emitting exactly
-        # what the per-key grouping would (see streaming/stateful.py)
-        q2a = (
-            dedup_daily_stream(page_stream(), bucketed=True)
-            .writeStream.format("parquet")
-            .option("path", dwm_uv)
-            .option("checkpointLocation", _dir(base, "ck_q2a"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2a)
-
-        # q2b — DWM user jump (UserJumpDetailApp): CEP bounce with event-time
-        # timers off the SAME live page log
-        q2b = (
-            detect_bounce_stream(page_stream(), bucketed=True)
-            .writeStream.format("parquet")
-            .option("path", dwm_uj)
-            .option("checkpointLocation", _dir(base, "ck_q2b"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2b)
-
-        # q3 — DWS visitor stats (VisitorStatsApp): union the three live
-        # layers, count per 10-minute window per metric
-        pv = page_stream().select(F.lit("pv").alias("src"), "ts")
-        uv = (
-            spark.readStream.schema(
-                "user_id long, dt string, first_event_id long, first_ts timestamp"
-            )
-            .parquet(dwm_uv)
-            .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
-        )
-        uj = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts timestamp, bounce_reason string"
-            )
-            .parquet(dwm_uj)
-            .select(F.lit("uj").alias("src"), "ts")
-        )
-        stats = (
-            pv.unionByName(uv)
-            .unionByName(uj)
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(
-                F.sum(F.when(F.col("src") == "pv", 1).otherwise(0)).cast("long").alias("pv_ct"),
-                F.sum(F.when(F.col("src") == "uv", 1).otherwise(0)).cast("long").alias("uv_ct"),
-                F.sum(F.when(F.col("src") == "uj", 1).otherwise(0)).cast("long").alias("uj_ct"),
-            )
-        )
-        # a query captures the shuffle conf at START: the pandas-state
-        # layers above run wide (parallel Python work), while this JVM
-        # window agg takes the narrow JVM-state width — in complete mode it
-        # re-commits every window's store each trigger, so per-partition
-        # store machinery dominates (see session.stream_jvm_state_width)
-        from gmall_spark.session import stream_jvm_state_width
-
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
-        q3 = (
-            stats.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q3)
-
+    src = chunk_events(spark, sf_dir, 3)
+    with warehouse_topology(spark, src, base, trigger_secs) as queries:
         _drain(queries, trigger_secs, timeout_secs, spark=spark)
-        for q in queries:
-            q.stop()
-        queries = []
-    finally:
-        for q in queries:  # error path — don't leak running queries
-            try:
-                q.stop()
-            except Exception:
-                pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_idle is None:
-            spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.noDataProgressEventInterval", prev_idle
-            )
-
-    from gmall_spark.functions import window_bounds
-
-    # spool + drop the memory sink (same reasoning as run_to_memory: don't
-    # pin the result in the JVM for the rest of the session)
-    tbl = spark.table(sink_name)
-    schema = tbl.schema
-    spool = os.path.join(base, "dws_out")
-    tbl.write.mode("overwrite").parquet(spool)
-    spark.catalog.dropTempView(sink_name)
-    out = spark.read.schema(schema).parquet(spool)
-    stt, edt = window_bounds(F.col("w"))
-    return (
-        out.withColumn("stt", stt)
-        .withColumn("edt", edt)
-        .drop("w")
-        .select("stt", "edt", "pv_ct", "uv_ct", "uj_ct")
-    )
+    return _dws_result(spark, base)
 
 
 def _copy_chunks(shared: str, src: str) -> int:
@@ -435,120 +445,17 @@ def warehouse_e2e_append(
     delay exceeds the range), so the memory sink holds each real window
     exactly once — duplicate emission, a window lost to lateness, or a
     missed timer flush all break the oracle counts."""
-    from datetime import timedelta
-
-    from gmall_spark.session import spool_dir, stream_jvm_state_width, stream_shuffle_width
-    from gmall_spark.sources import load_table
-    from gmall_spark.streaming.multibatch import chunk_events
-
     lo, hi = load_table(spark, sf_dir, "events").agg(F.min("ts"), F.max("ts")).first()
-    range_secs = int((hi - lo).total_seconds()) + 1
-    delay_secs = range_secs + 700
+    delay_secs = int((hi - lo).total_seconds()) + 1 + 700
 
     base = spool_dir("e2ea_")
     src = _dir(base, "src")
     # private copy of the chunk files: sentinels must not pollute the shared
     # chunk cache other entries stream from
     newest = _copy_chunks(chunk_events(spark, sf_dir, 3), src)
-
-    dwd_page = _dir(base, "dwd_page")
-    dwm_uv = _dir(base, "dwm_uv")
-    dwm_uj = _dir(base, "dwm_uj")
-    sink_name = f"e2ea_{os.path.basename(base)}"
-    trig = {"processingTime": f"{trigger_secs} seconds"}
-    page_schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, value double"
-    )
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_width()))
-    # idle progress at trigger cadence — this topology drains THREE times
-    # (pre-sentinel, post-A, post-B), so the 10 s default throttle would
-    # stall every cascade per layer (see _drain docstring)
-    prev_idle = spark.conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", None
-    )
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
-    queries = []
-    try:
-        ev = (
-            spark.readStream.schema(page_schema + ", props string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q1 = (
-            ev.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", dwd_page)
-            .option("checkpointLocation", _dir(base, "ck_q1"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q1)
-
-        def page_stream() -> DataFrame:
-            return spark.readStream.schema(page_schema).parquet(dwd_page)
-
-        q2a = (
-            dedup_daily_stream(page_stream(), bucketed=True)
-            .writeStream.format("parquet")
-            .option("path", dwm_uv)
-            .option("checkpointLocation", _dir(base, "ck_q2a"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2a)
-        q2b = (
-            detect_bounce_stream(page_stream(), bucketed=True)
-            .writeStream.format("parquet")
-            .option("path", dwm_uj)
-            .option("checkpointLocation", _dir(base, "ck_q2b"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2b)
-
-        pv = page_stream().select(F.lit("pv").alias("src"), "ts")
-        uv = (
-            spark.readStream.schema(
-                "user_id long, dt string, first_event_id long, first_ts timestamp"
-            )
-            .parquet(dwm_uv)
-            .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
-        )
-        uj = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts timestamp, bounce_reason string"
-            )
-            .parquet(dwm_uj)
-            .select(F.lit("uj").alias("src"), "ts")
-        )
-        stats = (
-            pv.unionByName(uv)
-            .unionByName(uj)
-            # watermark FIRST (sentinel ts must drive it), filter second
-            .withWatermark("ts", f"{delay_secs} seconds")
-            .filter(F.col("ts") <= F.lit(hi))
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(
-                F.sum(F.when(F.col("src") == "pv", 1).otherwise(0)).cast("long").alias("pv_ct"),
-                F.sum(F.when(F.col("src") == "uv", 1).otherwise(0)).cast("long").alias("uv_ct"),
-                F.sum(F.when(F.col("src") == "uj", 1).otherwise(0)).cast("long").alias("uj_ct"),
-            )
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
-        q3 = (
-            stats.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q3)
-
+    with warehouse_topology(
+        spark, src, base, trigger_secs, lateness=(delay_secs, hi)
+    ) as queries:
         # Sentinel A is dropped IMMEDIATELY, not after a full-topology drain:
         # it rides the SAME single channel as the real data (src —q1→
         # dwd_page —q2a/q2b→), and ordering is guaranteed end-to-end without
@@ -584,38 +491,7 @@ def warehouse_e2e_append(
             src, "b_window_close", hi + timedelta(seconds=delay_secs + 1200), 1, newest
         )
         # final drain covers ALL four: B must flow through q1→q3, every
-        # closed window must reach the sink, and stop() below must not
-        # interrupt a state-store commit anywhere in the topology
+        # closed window must reach the sink, and the stop on leaving the
+        # block must not interrupt a state-store commit anywhere
         _drain(queries, trigger_secs, max(budget - time.monotonic(), 30.0), spark=spark)
-        for q in queries:
-            q.stop()
-        queries = []
-    finally:
-        for q in queries:  # error path — don't leak running queries
-            try:
-                q.stop()
-            except Exception:
-                pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_idle is None:
-            spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.noDataProgressEventInterval", prev_idle
-            )
-
-    from gmall_spark.functions import window_bounds
-
-    tbl = spark.table(sink_name)
-    schema = tbl.schema
-    spool = os.path.join(base, "dws_out")
-    tbl.write.mode("overwrite").parquet(spool)
-    spark.catalog.dropTempView(sink_name)
-    out = spark.read.schema(schema).parquet(spool)
-    stt, edt = window_bounds(F.col("w"))
-    return (
-        out.withColumn("stt", stt)
-        .withColumn("edt", edt)
-        .drop("w")
-        .select("stt", "edt", "pv_ct", "uv_ct", "uj_ct")
-    )
+    return _dws_result(spark, base)

@@ -301,19 +301,15 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
     defaults (10 GB probe / 10 MB build) gate it to genuinely big scans."""
     from pyspark.sql import functions as F
 
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    from gmall_spark.session import conf_scope
+
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         l = spark.read.parquet(f"{SF}/lineitem.parquet")
         o = spark.read.parquet(f"{SF}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -324,12 +320,6 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
         optimized = j._jdf.queryExecution().optimizedPlan().toString()
         assert "bloom_filter_agg" in optimized, optimized
         assert "might_contain" in optimized, optimized
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def test_lateral_topk_decorrelates_to_window_rank(spark):

@@ -161,17 +161,12 @@ def test_keyed_state_chunk_order_soundness(spark, entry):
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
+    from gmall_spark.session import conf_scope
+
+    with conf_scope(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": 4}):
         df = entrymod.queries()[entry](spark, sf)
         ok, msg = orc.compare(df, orc.duck_connection(sf), entrymod.oracle_sql()[entry])
-        assert ok, f"{entry} under 4-row Arrow chunks: {msg[:400]}"
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert ok, f"{entry} under 4-row Arrow chunks: {msg[:400]}"
 
 
 def test_auto_density_assert_scopes_to_gate_band():
@@ -252,46 +247,3 @@ def test_pq_seed_fetch_skips_null_ids(spark):
     seeds = np.asarray([rows[i][1] for i in range(1, 5)])
     assert np.array_equal(books[0], seeds[:, :2])
     assert np.array_equal(books[1], seeds[:, 2:])
-
-
-# ---------------------------------------------------------------------------
-# topology: event-driven quiescence listener (replaces the 6-poll drain tail)
-# ---------------------------------------------------------------------------
-def test_quiesce_listener_streak_accounting():
-    from types import SimpleNamespace
-
-    from gmall_spark.streaming.topology import _IDLE_STREAK, _QuiesceListener
-
-    w = _QuiesceListener({"r1", "r2"})
-    assert w.min_streak() == 0
-
-    # idle events accumulate per query; min is over ALL tracked queries
-    for _ in range(_IDLE_STREAK):
-        w.onQueryIdle(SimpleNamespace(runId="r1"))
-    assert w.min_streak() == 0  # r2 has no streak yet
-    for _ in range(_IDLE_STREAK):
-        w.onQueryIdle(SimpleNamespace(runId="r2"))
-    assert w.min_streak() == _IDLE_STREAK
-
-    # an executed batch ANYWHERE (progress event from a tracked query)
-    # resets EVERY streak — its output may feed an undiscovered downstream
-    w.onQueryProgress(
-        SimpleNamespace(progress=SimpleNamespace(runId="r2"))
-    )
-    assert w.min_streak() == 0
-
-    # events from untracked queries (other work on the shared session) are
-    # ignored in both directions
-    for _ in range(_IDLE_STREAK):
-        w.onQueryIdle(SimpleNamespace(runId="r1"))
-        w.onQueryIdle(SimpleNamespace(runId="r2"))
-    w.onQueryProgress(
-        SimpleNamespace(progress=SimpleNamespace(runId="other"))
-    )
-    assert w.min_streak() == _IDLE_STREAK
-    w.onQueryIdle(SimpleNamespace(runId="other"))
-    assert w.min_streak() == _IDLE_STREAK
-
-    # reset() is the caller's re-arm between belt-check failures
-    w.reset()
-    assert w.min_streak() == 0

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from gmall_spark.operators.joins import interval_join
 from gmall_spark.operators.stateful import dedup_daily, detect_bounce, first_touch
 from gmall_spark.operators.windows import tumbling_stats
+from gmall_spark.session import ROCKSDB_PROVIDER, conf_scope
 from gmall_spark.sources import load_table
 from gmall_spark.streaming.pipelines import run_to_memory, windowed_stats_stream, interval_join_stream
 from gmall_spark.streaming.stateful import (
@@ -408,11 +409,7 @@ def test_rocksdb_state_store_matches_default_provider(spark, chunked_events):
     under RocksDB as under the default heap-map provider — covering both
     state APIs we ship (applyInPandasWithState via fix_is_new_stream,
     dropDuplicates-style keyed dedup via dedup_daily_stream)."""
-    from gmall_spark.session import enable_rocksdb_state
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    enable_rocksdb_state(spark)
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         got_isnew = run_to_memory(
             fix_is_new_stream(read_stream(spark, chunked_events)), "t_isnew_rocks"
         )
@@ -435,11 +432,6 @@ def test_rocksdb_state_store_matches_default_provider(spark, chunked_events):
         assert rows_set(got_uv, ["user_id", "dt", "first_event_id"]) == rows_set(
             batch_uv, ["user_id", "dt", "first_event_id"]
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
 
 
 def test_watermark_evicts_closed_window_state(spark):
@@ -556,17 +548,11 @@ def test_detect_bounce_tws_matches_apiws_twin(spark, chunked_events):
     apiws = run_to_memory(
         detect_bounce_stream(read_stream(spark, chunked_events)), "t_bounce_a"
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         tws = run_to_memory(
             detect_bounce_tws(read_stream(spark, chunked_events)), "t_bounce_t"
         )
-        assert rows_set(tws, cols) == rows_set(apiws, cols)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    assert rows_set(tws, cols) == rows_set(apiws, cols)
 
 
 def test_tws_timer_fires_and_clears_pending_state(spark):
@@ -589,8 +575,7 @@ def test_tws_timer_fires_and_clears_pending_state(spark):
     from gmall_spark.streaming.multibatch import stream_event_chunks
     from gmall_spark.streaming.stateful import detect_bounce_tws
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         df = detect_bounce_tws(stream_event_chunks(spark, SF, 3))
         name = f"twstimer_{time.time_ns()}"
         q = (
@@ -603,11 +588,6 @@ def test_tws_timer_fires_and_clears_pending_state(spark):
         q.awaitTermination()
         progress = list(q.recentProgress)
         spark.catalog.dropTempView(name)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     ops = [(p, op) for p in progress for op in p["stateOperators"]]
     assert ops, "no stateOperators progress recorded"

@@ -77,3 +77,43 @@ def test_drain_rechecks_termination_before_belt():
     queries = [_DeadQuery("q1"), _DeadQuery("q2")]
     with pytest.raises(RuntimeError, match="q2 terminated during drain: boom"):
         _drain(queries, 0.3, 5.0, spark=spark)
+
+
+def test_quiesce_listener_streak_accounting():
+    from types import SimpleNamespace
+
+    from gmall_spark.streaming.topology import _IDLE_STREAK, _QuiesceListener
+
+    w = _QuiesceListener({"r1", "r2"})
+    assert w.min_streak() == 0
+
+    # idle events accumulate per query; min is over ALL tracked queries
+    for _ in range(_IDLE_STREAK):
+        w.onQueryIdle(SimpleNamespace(runId="r1"))
+    assert w.min_streak() == 0  # r2 has no streak yet
+    for _ in range(_IDLE_STREAK):
+        w.onQueryIdle(SimpleNamespace(runId="r2"))
+    assert w.min_streak() == _IDLE_STREAK
+
+    # an executed batch ANYWHERE (progress event from a tracked query)
+    # resets EVERY streak — its output may feed an undiscovered downstream
+    w.onQueryProgress(
+        SimpleNamespace(progress=SimpleNamespace(runId="r2"))
+    )
+    assert w.min_streak() == 0
+
+    # events from untracked queries (other work on the shared session) are
+    # ignored in both directions
+    for _ in range(_IDLE_STREAK):
+        w.onQueryIdle(SimpleNamespace(runId="r1"))
+        w.onQueryIdle(SimpleNamespace(runId="r2"))
+    w.onQueryProgress(
+        SimpleNamespace(progress=SimpleNamespace(runId="other"))
+    )
+    assert w.min_streak() == _IDLE_STREAK
+    w.onQueryIdle(SimpleNamespace(runId="other"))
+    assert w.min_streak() == _IDLE_STREAK
+
+    # reset() is the caller's re-arm between belt-check failures
+    w.reset()
+    assert w.min_streak() == 0

@@ -1,4 +1,5 @@
-"""Topology-level crash/resume exactly-once.
+"""Topology-level crash/resume exactly-once, on the topology the registry
+ships (topology.warehouse_topology: bucketed DWM state, append-mode DWS).
 
 The per-query checkpoint tests (test_jdbc_sink, test_streaming_routing) prove
 a SINGLE query resumes without duplicating output. This test proves the
@@ -26,226 +27,81 @@ import os
 import time
 from datetime import timedelta
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from gmall_spark.operators.stateful import dedup_daily, detect_bounce
 from gmall_spark.sources import load_table
-from gmall_spark.streaming.stateful import dedup_daily_stream, detect_bounce_stream
-from gmall_spark.streaming.topology import _drain
+from gmall_spark.streaming.multibatch import chunk_events
+from gmall_spark.streaming.topology import (
+    PAGE_SCHEMA,
+    _copy_chunks,
+    _drain,
+    _write_sentinel,
+    warehouse_topology,
+)
 
 SF = "/root/testdata/sf0.001"
 N_CHUNKS = 4
-TRIG = {"processingTime": "0.3 seconds"}
-PAGE_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double"
-)
-
-
-def _mkdir(base, name):
-    d = os.path.join(base, name)
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _write_chunks(spark, src):
-    pdf = load_table(spark, SF, "events").orderBy("ts").toPandas()
-    chunk = (len(pdf) + N_CHUNKS - 1) // N_CHUNKS
-    mtime = 1_600_000_000
-    for i in range(N_CHUNKS):
-        part = pdf.iloc[i * chunk : (i + 1) * chunk]
-        p = os.path.join(src, f"part-{i:03d}.parquet")
-        part.to_parquet(
-            p, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        os.utime(p, (mtime + i * 10, mtime + i * 10))
-    lo, hi = pdf["ts"].min(), pdf["ts"].max()
-    return lo.to_pydatetime(), hi.to_pydatetime()
-
-
-def _sentinel(src, tag, ts, order):
-    # same atomic write-then-rename as topology._sentinel: q1 is live-polling
-    pdf = pd.DataFrame(
-        {
-            "event_id": [-(order + 1)],
-            "ts": pd.Series([ts], dtype="datetime64[us]"),
-            "user_id": [-1],
-            "event_type": ["__flush__"],
-            "value": [0.0],
-            "props": [None],
-        }
-    )
-    tmp = os.path.join(src, f".zz_sentinel_{tag}.parquet.tmp")
-    pdf.to_parquet(tmp, index=False)
-    os.utime(tmp, (1_600_001_000 + order * 10,) * 2)
-    os.rename(tmp, os.path.join(src, f"zz_sentinel_{tag}.parquet"))
-
-
-def _start_topology(spark, base, src, hi, delay_secs):
-    """Start the four checkpointed queries; idempotent across restarts —
-    every query (q3 included, unlike the bench entry's memory sink) writes a
-    parquet sink with a checkpoint, so the whole topology is resumable."""
-    dwd_page = _mkdir(base, "dwd_page")
-    dwm_uv = _mkdir(base, "dwm_uv")
-    dwm_uj = _mkdir(base, "dwm_uj")
-    dws = _mkdir(base, "dws")
-    queries = []
-
-    ev = (
-        spark.readStream.schema(PAGE_SCHEMA + ", props string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    queries.append(
-        ev.select("event_id", "ts", "user_id", "event_type", "value")
-        .writeStream.format("parquet")
-        .option("path", dwd_page)
-        .option("checkpointLocation", _mkdir(base, "ck_q1"))
-        .outputMode("append")
-        .trigger(**TRIG)
-        .start()
-    )
-
-    def page_stream():
-        return spark.readStream.schema(PAGE_SCHEMA).parquet(dwd_page)
-
-    queries.append(
-        dedup_daily_stream(page_stream())
-        .writeStream.format("parquet")
-        .option("path", dwm_uv)
-        .option("checkpointLocation", _mkdir(base, "ck_q2a"))
-        .outputMode("append")
-        .trigger(**TRIG)
-        .start()
-    )
-    queries.append(
-        detect_bounce_stream(page_stream())
-        .writeStream.format("parquet")
-        .option("path", dwm_uj)
-        .option("checkpointLocation", _mkdir(base, "ck_q2b"))
-        .outputMode("append")
-        .trigger(**TRIG)
-        .start()
-    )
-
-    pv = page_stream().select(F.lit("pv").alias("src"), "ts")
-    uv = (
-        spark.readStream.schema(
-            "user_id long, dt string, first_event_id long, first_ts timestamp"
-        )
-        .parquet(dwm_uv)
-        .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
-    )
-    uj = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, bounce_reason string"
-        )
-        .parquet(dwm_uj)
-        .select(F.lit("uj").alias("src"), "ts")
-    )
-    stats = (
-        pv.unionByName(uv)
-        .unionByName(uj)
-        .withWatermark("ts", f"{delay_secs} seconds")
-        .filter(F.col("ts") <= F.lit(hi))
-        .groupBy(F.window("ts", "10 minutes").alias("w"))
-        .agg(
-            F.sum(F.when(F.col("src") == "pv", 1).otherwise(0)).cast("long").alias("pv_ct"),
-            F.sum(F.when(F.col("src") == "uv", 1).otherwise(0)).cast("long").alias("uv_ct"),
-            F.sum(F.when(F.col("src") == "uj", 1).otherwise(0)).cast("long").alias("uj_ct"),
-        )
-        .select(
-            F.col("w.start").alias("stt"),
-            F.col("w.end").alias("edt"),
-            "pv_ct",
-            "uv_ct",
-            "uj_ct",
-        )
-    )
-    queries.append(
-        stats.writeStream.format("parquet")
-        .option("path", dws)
-        .option("checkpointLocation", _mkdir(base, "ck_q3"))
-        .outputMode("append")
-        .trigger(**TRIG)
-        .start()
-    )
-    return queries
 
 
 def test_topology_crash_resume_exactly_once(spark, tmp_path):
     base = str(tmp_path)
-    src = _mkdir(base, "src")
-    lo, hi = _write_chunks(spark, src)
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    newest = _copy_chunks(chunk_events(spark, SF, N_CHUNKS), src)
+    lo, hi = load_table(spark, SF, "events").agg(F.min("ts"), F.max("ts")).first()
     delay_secs = int((hi - lo).total_seconds()) + 1 + 700
+    dws = os.path.join(base, "dws")
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_idle = spark.conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", None
+    def topology():
+        # every query, the DWS one included, writes a checkpointed parquet
+        # sink, so the whole topology resumes from the same checkpoints
+        return warehouse_topology(
+            spark, src, base, lateness=(delay_secs, hi), dws_path=dws
+        )
+
+    # ---- phase 1: run until mid-pipeline, then crash-stop all four.
+    # Condition: q1 has committed ≥2 of the 4 chunks, so downstream queries
+    # hold keyed state and partially-aggregated windows while unprocessed
+    # chunks remain — the restart must pick up BOTH the half-read source and
+    # the half-built state. Leaving the block stops every query with no
+    # drain: in-flight downstream batches abort, like a crash.
+    with topology() as queries:
+        deadline = time.monotonic() + 120
+        while True:
+            p = queries[0].lastProgress
+            if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
+                break
+            if time.monotonic() > deadline:
+                raise TimeoutError("q1 never reached its second chunk")
+            time.sleep(0.1)
+
+    # the crash must land mid-pipeline for the resume to prove anything:
+    # q1 ingested some-but-not-all chunks (sentinels not yet written)
+    committed = spark.read.schema(PAGE_SCHEMA).parquet(os.path.join(base, "dwd_page"))
+    n_committed = committed.count()
+    n_total = load_table(spark, SF, "events").count()
+    assert 0 < n_committed < n_total, (
+        f"crash landed outside the pipeline: {n_committed}/{n_total} "
+        "events already at DWD"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
-    try:
-        # ---- phase 1: run until mid-pipeline, then crash-stop all four.
-        # Condition: q1 has committed ≥2 of the 4 chunks, so downstream
-        # queries hold keyed state and partially-aggregated windows while
-        # unprocessed chunks remain — the restart must pick up BOTH the
-        # half-read source and the half-built state.
-        queries = _start_topology(spark, base, src, hi, delay_secs)
-        try:
-            deadline = time.monotonic() + 120
-            while True:
-                p = queries[0].lastProgress
-                if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
-                    break
-                if time.monotonic() > deadline:
-                    raise TimeoutError("q1 never reached its second chunk")
-                time.sleep(0.1)
-        finally:
-            # no drain — in-flight downstream batches abort, like a crash
-            for q in queries:
-                q.stop()
 
-        # the crash must land mid-pipeline for the resume to prove anything:
-        # q1 ingested some-but-not-all chunks (sentinels not yet written)
-        committed = spark.read.schema(PAGE_SCHEMA).parquet(
-            os.path.join(base, "dwd_page")
+    # ---- phase 2: resume from the same checkpoints, finish the stream,
+    # flush timers (sentinel A) and close windows (sentinel B)
+    with topology() as queries:
+        _drain(queries, 0.3, 240.0, spark=spark)
+        _write_sentinel(src, "a_timer_flush", hi + timedelta(seconds=610), 0, newest)
+        _drain(queries, 0.3, 240.0, spark=spark)
+        _write_sentinel(
+            src, "b_window_close", hi + timedelta(seconds=delay_secs + 1200), 1, newest
         )
-        n_committed = committed.count()
-        n_total = load_table(spark, SF, "events").count()
-        assert 0 < n_committed < n_total, (
-            f"crash landed outside the pipeline: {n_committed}/{n_total} "
-            "events already at DWD"
-        )
+        _drain(queries, 0.3, 240.0, spark=spark)
 
-        # ---- phase 2: resume from the same checkpoints, finish the stream,
-        # flush timers (sentinel A) and close windows (sentinel B)
-        queries = _start_topology(spark, base, src, hi, delay_secs)
-        try:
-            _drain(queries, 0.3, 240.0)
-            _sentinel(src, "a_timer_flush", hi + timedelta(seconds=610), 0)
-            _drain(queries, 0.3, 240.0)
-            _sentinel(
-                src, "b_window_close", hi + timedelta(seconds=delay_secs + 1200), 1
-            )
-            _drain(queries, 0.3, 240.0)
-        finally:
-            for q in queries:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_idle is None:
-            spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.noDataProgressEventInterval", prev_idle
-            )
-
-    got = spark.read.parquet(os.path.join(base, "dws")).collect()
+    got = spark.read.parquet(dws).collect()
 
     # append mode + exactly-once ⇒ each window emitted on exactly one side of
     # the restart, never both
-    keys = [(r["stt"], r["edt"]) for r in got]
+    keys = [(r["w"]["start"], r["w"]["end"]) for r in got]
     assert len(keys) == len(set(keys)), "window emitted twice across restart"
 
     # batch oracle from the batch twins over the full input
@@ -271,6 +127,4 @@ def test_topology_crash_resume_exactly_once(spark, tmp_path):
         )
         for r in pv.join(uv, "w", "full").join(uj, "w", "full").collect()
     }
-    assert {
-        (r["stt"], r["edt"]): (r["pv_ct"], r["uv_ct"], r["uj_ct"]) for r in got
-    } == exp
+    assert dict(zip(keys, ((r["pv_ct"], r["uv_ct"], r["uj_ct"]) for r in got))) == exp
