@@ -192,21 +192,25 @@ def pagerank(
         and adj_chunk is None
         and _fits_broadcast(edges.sparkSession, adj.count())
     )
+    if gather:
+        # the rank table carries out_deg, so each round's contribution table
+        # is a projection of it rather than a join against the adjacency
+        ranks = adj.select(
+            F.col("src").alias("node"), "out_deg", F.lit(SCALE).cast("long").alias("rank")
+        )
     for rnd in range(1, rounds + 1):
         if gather:
-            # contribution table (node-sized): rank div out_deg per node —
-            # adj and ranks are both hash(src/node) partitioned, zero-exchange
-            # join; the result is broadcast so the edge-sized gather below
-            # never leaves the adjacency cache's partitioning
-            contribs = (
-                adj.select("src", "out_deg")
-                .join(ranks, adj.src == ranks.node)
-                .select(F.col("node").alias("dst"), F.expr("rank div out_deg").alias("c"))
+            # contribution table (node-sized): rank div out_deg per node,
+            # broadcast so the edge-sized gather below never leaves the
+            # adjacency cache's partitioning. Grouping by (src, out_deg) is
+            # clustered by the cache's hash(src): no Exchange
+            contribs = ranks.select(
+                F.col("node").alias("dst"), F.expr("rank div out_deg").alias("c")
             )
             ranks = (
-                adj.select("src", F.explode("dsts").alias("dst"))
+                adj.select("src", "out_deg", F.explode("dsts").alias("dst"))
                 .join(F.broadcast(contribs), "dst")
-                .groupBy(F.col("src").alias("node"))
+                .groupBy(F.col("src").alias("node"), "out_deg")
                 .agg(
                     F.expr(
                         f"CAST({BASE} + ({DAMP_NUM} * sum(c)) div {DAMP_DEN} AS BIGINT)"
@@ -227,7 +231,7 @@ def pagerank(
         _round_plan("pagerank", rnd, ranks)
     from gmall_spark.session import unpersist_with
 
-    return unpersist_with(ranks, adj)
+    return unpersist_with(ranks.select("node", "rank"), adj)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gmall_spark.session import conf_scope
+
 
 def quantize(col: Column, lo: Column, hi: Column, bits: int = 16) -> Column:
     """Map col ∈ [lo, hi] to an integer cell in [0, 2^bits): integer
@@ -89,6 +91,14 @@ def with_zvalue(
     return df.withColumn(out_col, zvalue(cells, bits))
 
 
+#: range-boundary sample per output file (Spark's default is 100). The
+#: sampler's seed is the shuffle RDD's id, so with 100 the files' bounding
+#: boxes moved with the session's history: 8 files of sf0.01 events measured
+#: a mean te span of 0.571-0.601 across RDD-id offsets, and 0.579 at every
+#: offset with 10,000. Spark caps the total sample at 1M keys.
+_RANGE_SAMPLE_PER_FILE = 10_000
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -100,13 +110,17 @@ def write_zordered(
     sort, drop the key, write. Readers filtering on any subset of `dims` get
     row-group/file skipping from the stats parquet already records."""
     z = with_zvalue(df, dims, bits)
-    (
-        z.repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    with conf_scope(
+        df.sparkSession,
+        {"spark.sql.execution.rangeExchange.sampleSizePerPartition": _RANGE_SAMPLE_PER_FILE},
+    ):
+        (
+            z.repartitionByRange(n_files, F.col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
 
 
 def optimize_zorder(

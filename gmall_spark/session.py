@@ -264,63 +264,57 @@ def _cpus() -> int:
 
 
 def stream_shuffle_width() -> int:
-    """Shuffle/state-store width for KEYED-PANDAS-STATE streaming queries
-    (applyInPandasWithState / transformWithStateInPandas): the session's
-    core count. Their per-batch cost is the parallel Python work, so width
-    should track cores: measured solo on a 32-core box, 32 beats 8 on every
-    pandas-state entry (daily-UV dedup 6.1s → 2.0s). Unlike the JVM-state
-    family this width stays STATIC under input growth — the sf10 A/B
-    (BENCH_r06_sf10_streaming.json) measured the 32/64/96 curve flat within
-    noise on a quiet box (378/408/382s over the 4 heaviest entries) and 16
-    materially worse in both passes (≥1.4× the worst 32-run): Python work
-    saturates at physical cores, and partitions beyond that only add state
-    store open+commit overhead without adding parallelism."""
+    """Shuffle/state-store width for PER-KEY pandas-state streaming queries
+    (applyInPandasWithState / transformWithStateInPandas grouped by entity):
+    the session's core count. They pay one Python call per active key per
+    batch, so their per-batch cost is parallel Python work and the width
+    tracks cores: measured solo on a 32-core box, 32 beats 8 on every
+    per-key entry (daily-UV dedup 6.1s → 2.0s). The width stays STATIC
+    under input growth — the sf10 A/B (BENCH_r06_sf10_streaming.json)
+    measured the 32/64/96 curve flat within noise (378/408/382s over the 4
+    heaviest entries) and 16 materially worse (≥1.4× the worst 32-run):
+    Python work saturates at physical cores, and partitions beyond that
+    only add state-store open+commit overhead. It also fixes the hash-bucket
+    count of the bucketed keyed state (4 × this, streaming/stateful.py),
+    which is independent of the width that bucketed state RUNS at."""
     return _cpus()
 
 
-#: auto-width floor — the bench-corpus optimum; see stream_jvm_state_width
-_JVM_STATE_MIN_WIDTH = 8
-#: bytes of streaming input that justify one more state partition. Calibrated
-#: at sf10 (220 MB/source): width 8 ran 2.6-3.5x slower than 16/32 on the
-#: session/join/dedup entries (per-partition WORK dominates at that volume,
-#: inverting the sf0.1 result where store open+commit dominates), and the
-#: 16-vs-32 difference was noise — so ~27 partitions for a 220 MB source is
-#: on the flat part of the curve, while every sf<=1 source stays at the
-#: floor, matching the committed sf0.1/sf1 probes.
-_JVM_STATE_BYTES_PER_PARTITION = 8 * 1024 * 1024
+#: bytes of streaming input that justify one more state partition. 1 MiB:
+#: with the floor at 1, every sampled JVM-state entry at sf0.1 (0.6-14 MB
+#: of sources) ran at or below the old floor-8 width, and 8 MiB left
+#: streaming_order_wide (13.6 MB, width 1) ~40% slower than at width 8
+#: (BASELINE.md, "Sub-8 state widths"). sf10 sources (220 MB) reach the
+#: core cap, where per-partition WORK dominates (width 8 ran 2.6-3.5x
+#: slower than 16/32 there, BENCH_r05_sf10_streaming.json).
+BYTES_PER_PARTITION = 1 << 20
 
 
-def stream_jvm_state_width(input_bytes: int | None = None) -> int:
-    """Shuffle/state width for JVM-STATE streaming queries (windowed aggs,
-    dropDuplicates, session windows, stream-stream joins) — the
-    run_to_memory/run_collect_batches DEFAULT. Their per-batch cost is
-    dominated by per-partition state-store machinery, not task parallelism:
-    every partition's store pays open+commit per micro-batch plus a full
-    scan in the watermark-eviction batch, and a stream-stream join carries
-    FOUR store instances per partition (per side: keyToNumValues +
-    keyWithIndexToValue). Measured at sf0.1: the chained-join entry runs
-    16.6s at width 32 vs 4.3s at width 8, and an 8-entry window-agg block
-    drops 24-33s → 17-18s. The keyed-pandas entries measured the OPPOSITE
-    preference (stream_shuffle_width).
+def stream_state_width(input_bytes: int) -> int:
+    """Shuffle/state width for every stateful streaming query except
+    per-key pandas state: JVM state (windowed aggs, dropDuplicates, session
+    windows, stream-stream joins), the hash-bucketed keyed state, and the
+    whole live warehouse topology. It is the run_to_memory /
+    run_collect_batches default.
 
-    ``input_bytes`` (estimated source volume, see
-    pipelines._stream_input_bytes) auto-sizes the default so a 100× input
-    doesn't need an env var: one extra partition per 8 MiB of input
-    (_JVM_STATE_BYTES_PER_PARTITION), floored at the bench-corpus optimum
-    (8: every sf≤1 source stays there, matching the committed probes) and
-    capped at the cores-tracking width. The sf10 re-probe
-    (BENCH_r05_sf10_streaming.json) showed narrow is 2.6-3.5x SLOWER at
-    220 MB/trigger — per-partition work dominates there, inverting the
-    sf0.1 result — so the ramp toward cores is required, not merely safe.
-    Production sizes this to buffered state volume like any shuffle
-    width — billions of buffered rows want hundreds of partitions, which
-    the cores-tracking cap grants on a cluster-sized SPARK_GRAFT_CPUS."""
-    if not input_bytes:
-        return _JVM_STATE_MIN_WIDTH
-    return max(
-        _JVM_STATE_MIN_WIDTH,
-        min(stream_shuffle_width(), input_bytes // _JVM_STATE_BYTES_PER_PARTITION),
-    )
+    The width follows the input, not the host:
+    ``clamp(ceil(input_bytes / BYTES_PER_PARTITION), 1, cores)``.
+    ``input_bytes`` is the estimated source volume
+    (pipelines._stream_input_bytes), known before the query starts; 0
+    gives 1. A small stream's per-batch cost is fixed cost per
+    partition, not work: every partition's store pays open+commit per
+    micro-batch (a stream-stream join carries four store instances per
+    partition), and every partition of a bucketed-state query is one
+    Python task. Measured on 4 cores (BASELINE.md, "Sub-8 state widths"):
+    the live topology's DWM/DWS state_commit_s fell 1.36/1.32/4.48 s →
+    0.15/0.16/0.44 s at width 1 (sf0.01), and streaming_chained_stateful
+    at sf0.1 ran 3.6 s at width 2 vs 7.0 s at width 8 (medians of 3).
+    Hash buckets and window keys do not depend on the width, so what a
+    query emits does not change with it. Large inputs ramp toward cores:
+    a cluster-sized SPARK_GRAFT_CPUS grants hundreds of partitions to
+    billions of buffered rows."""
+    want = -(-input_bytes // BYTES_PER_PARTITION)
+    return max(1, min(stream_shuffle_width(), want))
 
 
 def get_spark(app_name: str = "gmall_spark", master: str | None = None) -> SparkSession:

@@ -35,8 +35,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # are naive/UTC (DuckDB)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    for col in _nanos_columns(path):
+    schema, nanos = _file_schema(path)
+    df = spark.read.schema(schema).parquet(path)
+    for col in nanos:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
@@ -44,11 +45,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _nanos_columns(path: str) -> list[str]:
+def _file_schema(path: str) -> tuple[T.StructType, list[str]]:
+    """The Spark schema ``spark.read.parquet(path)`` would infer, read from
+    the parquet footer on the driver instead of by a Spark job, and the
+    TIMESTAMP(NANOS) column names. Nanos columns map to long, as
+    spark.sql.legacy.parquet.nanosAsLong reads them; naive micros map to
+    TIMESTAMP_NTZ, as Spark infers them."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = pq.read_schema(path)
-    return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+    arrow = pq.read_schema(path)
+    nanos = [f.name for f in arrow if str(f.type) == "timestamp[ns]"]
+    for col in nanos:
+        i = arrow.get_field_index(col)
+        arrow = arrow.set(i, arrow.field(i).with_type(pa.int64()))
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True), nanos
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:

@@ -185,7 +185,7 @@ def stream_event_chunks(
 def run_collect_batches(
     df: DataFrame,
     output_mode: str = "append",
-    shuffle_partitions: int | None = None,  # default: session.stream_jvm_state_width()
+    shuffle_partitions: int | None = None,  # default: session.stream_state_width()
 ) -> DataFrame:
     """Drive a streaming frame with availableNow through foreachBatch,
     stamping every output row with the micro-batch id it emitted in. The
@@ -198,7 +198,7 @@ def run_collect_batches(
     row materialization, so the capture scales with the cluster exactly
     like any other sink (an earlier pandas-collect version hauled the full
     output through the driver twice)."""
-    from gmall_spark.session import conf_scope, spool_dir, stream_jvm_state_width
+    from gmall_spark.session import conf_scope, spool_dir, stream_state_width
     from gmall_spark.streaming.pipelines import _stream_input_bytes
 
     spark = df.sparkSession
@@ -213,7 +213,7 @@ def run_collect_batches(
             .parquet(spool)
         )
 
-    width = shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))
+    width = shuffle_partitions or stream_state_width(_stream_input_bytes(df))
     with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
             df.writeStream.foreachBatch(sink)

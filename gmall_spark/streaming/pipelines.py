@@ -351,7 +351,7 @@ def _stream_input_bytes(df: DataFrame) -> int:
     cluster's source-rate planner uses (file sizes / offset ranges) and it
     is available BEFORE the query starts — which is when the state width
     must be chosen. Unparseable/missing paths contribute 0 (the width then
-    falls back to the bench-corpus floor)."""
+    falls back to its floor of 1)."""
     import os
     import re
 
@@ -382,13 +382,10 @@ def run_to_memory(
 
     shuffle_partitions sizes the STATE STORE width for this query: stateful
     cost is (per-partition store open/commit per batch) vs (parallelism of
-    the keyed pandas work), so width should track cores and key cardinality,
-    not the batch-engine default of 200. Measured on this 32-core box at
-    sf0.1: width 32 beats 8 on every stateful entry (daily-UV dedup 6.1s →
-    2.0s) — the store overhead is far smaller than the core starvation.
-    Pinned at query start; the session conf is restored afterwards.
-    Default width is session.stream_jvm_state_width() — right for JVM-state
-    queries (window aggs, dedup, joins); keyed-PANDAS-state callers pass
+    the keyed work), not the batch-engine default of 200. Pinned at query
+    start; the session conf is restored afterwards. Default width is
+    session.stream_state_width() of the source bytes — right for JVM-state
+    and bucketed keyed-state queries; PER-KEY pandas-state callers pass
     shuffle_partitions=stream_shuffle_width() (see both docstrings).
 
     Sink choice is mode-driven. APPEND streams go straight to a parquet
@@ -403,10 +400,10 @@ def run_to_memory(
     """
     import os as _os
 
-    from gmall_spark.session import conf_scope, spool_dir, stream_jvm_state_width
+    from gmall_spark.session import conf_scope, spool_dir, stream_state_width
 
     spark = df.sparkSession
-    width = shuffle_partitions or stream_jvm_state_width(_stream_input_bytes(df))
+    width = shuffle_partitions or stream_state_width(_stream_input_bytes(df))
     if output_mode == "append":
         spool = spool_dir(f"filesink_{name}_")
         out_path = _os.path.join(spool, "out")

@@ -943,8 +943,7 @@ def streaming_mb_bucketed_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return run_collect_batches(
-        fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
-        shuffle_partitions=stream_shuffle_width(),
+        fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True)
     )
 
 
@@ -995,9 +994,7 @@ def streaming_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of entity count. Same first-touch emission, same oracle —
     the twin pair is the semantics proof."""
     out = run_to_memory(
-        dedup_daily_stream(stream_events(spark, sf_dir), bucketed=True),
-        _name("s_bkt_uv"),
-        shuffle_partitions=stream_shuffle_width(),
+        dedup_daily_stream(stream_events(spark, sf_dir), bucketed=True), _name("s_bkt_uv")
     )
     return out.select(
         "user_id", "dt", "first_event_id", F.date_format("first_ts", TS_FMT).alias("first_ts")
@@ -1015,8 +1012,7 @@ def streaming_mb_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_event_chunks,
     )
     out = run_collect_batches(
-        dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
-        shuffle_partitions=stream_shuffle_width(),
+        dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True)
     )
     return out.select(
         "user_id",
@@ -1143,8 +1139,7 @@ def streaming_mb_bucketed_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_event_chunks,
     )
     out = run_collect_batches(
-        detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True),
-        shuffle_partitions=stream_shuffle_width(),
+        detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3), bucketed=True)
     )
     return out.select(
         "event_id",

@@ -21,9 +21,11 @@ Design — one kernel per semantics, thin shells over it:
 - **Grouping.** ``_keyed_state`` is the one applyInPandasWithState shell.
   Per-key grouping (``bucketed=False``) groups by the entity key — the
   faithful Flink analog, one state row of ≤1-long arrays per entity.
-  Bucketed grouping groups by pmod(xxhash64(key), 4·stream width): one
-  state row per bucket, so a micro-batch costs a bounded number of Python
-  invocations instead of one per active entity (7.6–13.5× at sf10). Per-key
+  Bucketed grouping groups by pmod(xxhash64(key), 4·cores): one state row
+  per bucket, so a micro-batch costs a bounded number of Python
+  invocations instead of one per active entity (7.6–13.5× at sf10). The
+  bucket count does not depend on the width the query runs at, so bucketed
+  state takes the byte-sized session.stream_state_width. Per-key
   is simply identity bucketing — Flink's key-group idea (*State Management
   in Apache Flink*, VLDB 2017) — and both groupings emit bit-identically.
 - **TWS adapters.** ``fix_is_new_tws`` / ``detect_bounce_tws`` map their

@@ -49,15 +49,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from gmall_spark.functions import window_bounds
-from gmall_spark.session import (
-    conf_scope,
-    spool_dir,
-    stream_jvm_state_width,
-    stream_shuffle_width,
-)
+from gmall_spark.session import conf_scope, spool_dir, stream_state_width
 from gmall_spark.sources import load_table
 from gmall_spark.streaming.multibatch import chunk_events
-from gmall_spark.streaming.pipelines import spool_memory_sink
+from gmall_spark.streaming.pipelines import _stream_input_bytes, spool_memory_sink
 from gmall_spark.streaming.stateful import dedup_daily_stream, detect_bounce_stream
 
 PAGE_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -224,9 +219,12 @@ def warehouse_topology(
     parquet sink (append mode only); None to the memory sink that
     ``_dws_result(spark, base)`` reads back. The handoff directory names
     and the memory sink are how perfbench/tracing.py attributes progress
-    to the ``stream.*`` layers."""
+    to the ``stream.*`` layers. The DWD and DWM queries are named
+    ``<basename(base)>_dwd_page`` / ``_dwm_uv`` / ``_dwm_uj``; the DWS
+    query is named ``basename(base)``."""
     if dws_path is not None and lateness is None:
         raise ValueError("the parquet DWS sink is append-only: pass lateness")
+    name = os.path.basename(base)
     dwd_page = _dir(base, "dwd_page")
     dwm_uv = _dir(base, "dwm_uv")
     dwm_uj = _dir(base, "dwm_uj")
@@ -235,9 +233,10 @@ def warehouse_topology(
     def page_stream() -> DataFrame:
         return spark.readStream.schema(PAGE_SCHEMA).parquet(dwd_page)
 
-    def start_parquet(df: DataFrame, path: str, ck: str):
+    def start_parquet(df: DataFrame, path: str, ck: str, query_name: str):
         return (
             df.writeStream.format("parquet")
+            .queryName(query_name)
             .option("path", path)
             .option("checkpointLocation", _dir(base, ck))
             .outputMode("append")
@@ -245,33 +244,37 @@ def warehouse_topology(
             .start()
         )
 
+    # q1 — DWD: chunked event source (one file per trigger), cleaned
+    # projection (BaseLogApp's parse/clean stage; our events are already
+    # structured, so cleaning = typed projection)
+    ev = (
+        spark.readStream.schema(PAGE_SCHEMA + ", props string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
     queries = []
-    # wide (cores-tracking) width for the DWD/DWM stages: chunked file
-    # passthrough + keyed-pandas state, both parallel-work-bound. Idle
-    # progress at trigger cadence so _drain sees quiescence when it happens,
-    # not at the 10 s default throttle. Both are captured per query at
-    # start(), so they are set before the first start()
+    # One width for all four queries, sized from the source bytes: every
+    # later layer reads rows derived from those files, and each partition
+    # of a stateful layer pays a state-store commit (and, in the bucketed
+    # DWM layers, one Python task) per batch, whatever its rows
+    # (session.stream_state_width). Idle progress at trigger cadence so
+    # _drain sees quiescence when it happens, not at the 10 s default
+    # throttle. Both are captured per query at start(), so they are set
+    # before the first start()
     with conf_scope(
         spark,
         {
-            "spark.sql.shuffle.partitions": stream_shuffle_width(),
+            "spark.sql.shuffle.partitions": stream_state_width(_stream_input_bytes(ev)),
             "spark.sql.streaming.noDataProgressEventInterval": "250ms",
         },
     ):
         try:
-            # q1 — DWD: chunked event source (one file per trigger), cleaned
-            # projection (BaseLogApp's parse/clean stage; our events are
-            # already structured, so cleaning = typed projection)
-            ev = (
-                spark.readStream.schema(PAGE_SCHEMA + ", props string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-            )
             queries.append(
                 start_parquet(
                     ev.select("event_id", "ts", "user_id", "event_type", "value"),
                     dwd_page,
                     "ck_q1",
+                    f"{name}_dwd_page",
                 )
             )
             # q2a — DWM unique visit (UniqueVisitApp): daily firsts off the
@@ -281,9 +284,9 @@ def warehouse_topology(
             # per batch at any volume, emitting exactly what the per-key
             # grouping would (see streaming/stateful.py)
             uv_rows = dedup_daily_stream(page_stream(), bucketed=True)
-            queries.append(start_parquet(uv_rows, dwm_uv, "ck_q2a"))
+            queries.append(start_parquet(uv_rows, dwm_uv, "ck_q2a", f"{name}_dwm_uv"))
             uj_rows = detect_bounce_stream(page_stream(), bucketed=True)
-            queries.append(start_parquet(uj_rows, dwm_uj, "ck_q2b"))
+            queries.append(start_parquet(uj_rows, dwm_uj, "ck_q2b", f"{name}_dwm_uj"))
 
             # q3 — DWS visitor stats (VisitorStatsApp): union the three live
             # layers, count per 10-minute window per metric
@@ -315,22 +318,16 @@ def warehouse_topology(
                     for s in ("pv", "uv", "uj")
                 )
             )
-            # the pandas-state layers above run wide (parallel Python work),
-            # while this JVM window agg takes the narrow JVM-state width — in
-            # complete mode it re-commits every window's store each trigger,
-            # so per-partition store machinery dominates (see
-            # session.stream_jvm_state_width)
-            spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
             if dws_path is None:
                 queries.append(
                     stats.writeStream.format("memory")
-                    .queryName(os.path.basename(base))
+                    .queryName(name)
                     .outputMode("complete" if lateness is None else "append")
                     .trigger(**trig)
                     .start()
                 )
             else:
-                queries.append(start_parquet(stats, dws_path, "ck_q3"))
+                queries.append(start_parquet(stats, dws_path, "ck_q3", name))
             yield queries
         except BaseException:
             for q in queries:  # error path — don't leak running queries

@@ -1,4 +1,5 @@
-"""Unit tests for session-level scratch/spool plumbing (no SparkSession).
+"""Unit tests for session-level scratch/spool plumbing and the streaming
+state-width rule (no SparkSession).
 
 The spool GC bug class these pin down: ``run_to_memory`` and friends return
 LAZY DataFrames whose only backing data is a parquet spool directory. A
@@ -9,6 +10,10 @@ process's liveness checkable from the dirname so the GC can exempt it.
 
 import os
 import time
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 import gmall_spark.session as sess
 
@@ -95,3 +100,26 @@ def test_gc_deletes_expired_untagged_entries(tmp_path):
     stale = _make_entry(root, "landing_old", sess._SPOOL_TTL_SECS + 60)
     _run_gc(root)
     assert not os.path.exists(stale)
+
+
+@pytest.mark.parametrize("cpus", ["1", "4", "32"])
+# the env var is the same for every example, so the fixture may be shared
+@settings(
+    max_examples=200,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(a=st.integers(0, 1 << 50), b=st.integers(0, 1 << 50))
+def test_stream_state_width_follows_bytes(monkeypatch, cpus, a, b):
+    """Floor 1, never above cores, non-decreasing in the input bytes, and
+    exactly ceil(bytes / BYTES_PER_PARTITION) in between."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    cores = int(cpus)
+    assert sess.stream_state_width(0) == 1
+    assert sess.stream_state_width(sess.BYTES_PER_PARTITION) == 1
+    assert sess.stream_state_width(sess.BYTES_PER_PARTITION + 1) == min(2, cores)
+    lo, hi = sorted((a, b))
+    w_lo, w_hi = sess.stream_state_width(lo), sess.stream_state_width(hi)
+    assert 1 <= w_lo <= w_hi <= cores
+    per = sess.BYTES_PER_PARTITION
+    assert w_lo == min(cores, max(1, (lo + per - 1) // per))

@@ -1,5 +1,6 @@
-"""Unit tests for the warehouse topology's drain and sentinel helpers (no
-Spark: stub listener events, stub queries, plain files)."""
+"""Tests for the warehouse topology: the drain and sentinel helpers (no
+Spark: stub listener events, stub queries, plain files), and one live run
+at sf0.001 for the query names and the state width."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from gmall_spark.streaming.topology import (
     _copy_chunks,
     _drain,
     _write_sentinel,
+    warehouse_topology,
 )
 
 
@@ -117,3 +119,36 @@ def test_quiesce_listener_streak_accounting():
     # reset() is the caller's re-arm between belt-check failures
     w.reset()
     assert w.min_streak() == 0
+
+
+def test_live_topology_names_and_state_width(spark, sf_dir, tmp_path):
+    """Every query carries its layer's name, and every stateful operator of
+    the topology runs at the one width sized from the source bytes — 1 at
+    sf0.001 — whatever the host's cores."""
+    from gmall_spark.session import stream_state_width
+    from gmall_spark.streaming.multibatch import chunk_events
+
+    src = chunk_events(spark, sf_dir, 3)
+    src_bytes = sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
+    width = stream_state_width(src_bytes)
+    assert width == 1
+    base = str(tmp_path / "topo")
+    name = os.path.basename(base)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with warehouse_topology(spark, src, base) as queries:
+        _drain(queries, 0.3, 300.0, spark=spark)
+        assert [q.name for q in queries] == [
+            f"{name}_dwd_page",
+            f"{name}_dwm_uv",
+            f"{name}_dwm_uj",
+            name,
+        ]
+        assert {q.name for q in queries} <= {q.name for q in spark.streams.active}
+        for q in queries[1:]:
+            widths = {
+                op["numShufflePartitions"]
+                for p in q.recentProgress
+                for op in p["stateOperators"]
+            }
+            assert widths == {width}, (q.name, widths)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
